@@ -82,6 +82,15 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", _shuffle_compress_default()),
         )
     )
+    if master.startswith("local"):
+        # serial file listing: a read of more than 32 paths (the default
+        # threshold) lists them in a Spark job, which on a cluster spreads
+        # remote-FS round trips over executors but on a local master only
+        # queues behind the same cores; listing a manifest's explicit local
+        # paths in the driver costs microseconds each
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

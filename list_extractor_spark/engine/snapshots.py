@@ -16,8 +16,14 @@ the container:
     (pred_bucket), row counts, and subj min/max bounds, so bucket-filtered
     and subj-range reads prune FILES before Spark ever lists or opens them
     — the scan-planning benefit that makes metadata tables matter at 10^5+
-    files.  compact_table doubles as the clustering pass that makes the
-    bounds tight.
+    files.  The counts and bounds are read from the parquet footers of the
+    files the write produced, in the driver, so a commit runs no Spark job
+    but the write.  Bounds are None when some row group of a file carries
+    no subj min/max (parquet-mr drops binary stats once min + max reach
+    4 KB); readers keep such files, so subj-range reads stay exact.
+    compact_table doubles as the clustering pass that makes the bounds
+    tight.  The manifest also records the snapshot's schema, so a read
+    plans with no schema-inference job.
 
 Single-writer by design (the pipeline materialize stage is one job); the
 commit protocol makes concurrent READERS safe, not concurrent writers —
@@ -37,6 +43,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructField, StructType
 
 N_BUCKETS = 16
 
@@ -59,7 +66,6 @@ def _load_manifest(path: str, snapshot_id: int) -> dict:
 
 
 def _write_data_files(
-    spark: SparkSession,
     bucketed: DataFrame,
     path: str,
     max_records_per_file: int | None = None,
@@ -67,73 +73,90 @@ def _write_data_files(
     """Write a pred_bucket-carrying frame under a fresh ``data/commit-*/``
     dir and return its manifest file entries.
 
-    Per-file stats come from what actually committed, in ONE metadata-only
-    job (grouping by input_file_name — a count-per-file driver loop would
-    be one Spark job per file, unusable past a few hundred files).  A
-    zero-row write commits only _SUCCESS (no parquet footers), so probe
-    for data files first instead of letting the schema-less read throw."""
-    import glob as _glob
-    import urllib.parse
-
+    Per-file stats come from what actually committed: the driver lists the
+    ``pred_bucket=<b>/`` dirs the write produced and reads each file's
+    parquet footer (row count, subj min/max), so the write is the commit's
+    only Spark job.  The table is local-FS only (os.rename commits), so the
+    footers are plain local files.  A zero-row write commits only _SUCCESS
+    and yields no entries."""
     commit = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", f"commit-{commit}")
+    data_dir = os.path.abspath(os.path.join(path, "data", f"commit-{commit}"))
     writer = bucketed.write.mode("error")
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.partitionBy("pred_bucket").parquet(data_dir)
 
-    has_files = bool(_glob.glob(os.path.join(data_dir, "pred_bucket=*", "*.parquet")))
-    if not has_files:
-        return []  # empty commit is a legal snapshot (e.g. a filtered run)
-    stats = (
-        spark.read.parquet(data_dir)
-        .groupBy("pred_bucket", F.input_file_name().alias("f"))
-        .agg(
-            F.count("*").alias("count"),
-            # per-file column bounds, same single metadata pass: the
-            # Iceberg-style stats that let read_graph_at prune files from
-            # the MANIFEST on a subj range before Spark lists anything
-            F.min("subj").alias("subj_min"),
-            F.max("subj").alias("subj_max"),
-        )
-        .collect()
-    )
-    return sorted(
-        (
-            {
-                # input_file_name is a file: URI — strip scheme, unquote,
-                # and normpath (file:///x would otherwise store ///x,
-                # breaking path-identity checks like verify_table)
-                "path": os.path.normpath(
-                    urllib.parse.unquote(r["f"].removeprefix("file:"))
-                ),
-                "pred_bucket": r["pred_bucket"],
-                "n_rows": r["count"],
-                "subj_min": r["subj_min"],
-                "subj_max": r["subj_max"],
-            }
-            for r in stats
-        ),
-        key=lambda d: d["path"],
-    )
+    files = []
+    for bucket_dir in os.listdir(data_dir):
+        if not bucket_dir.startswith("pred_bucket="):
+            continue  # _SUCCESS
+        bdir = os.path.join(data_dir, bucket_dir)
+        for fn in os.listdir(bdir):
+            # Spark's own readers skip '.'/'_' files (.crc checksums)
+            if fn.endswith(".parquet") and not fn.startswith((".", "_")):
+                fp = os.path.join(bdir, fn)
+                n_rows, lo, hi = _footer_stats(fp, "subj")
+                files.append(
+                    {
+                        "path": fp,
+                        "pred_bucket": int(bucket_dir.removeprefix("pred_bucket=")),
+                        "n_rows": n_rows,
+                        "subj_min": lo,
+                        "subj_max": hi,
+                    }
+                )
+    return sorted(files, key=lambda d: d["path"])
+
+
+def _footer_stats(file_path: str, col: str) -> tuple[int, str | None, str | None]:
+    """(rows, min, max) of ``col`` from one parquet file's footer.
+
+    The bounds are those Spark's F.min/F.max give (both order strings by
+    unsigned UTF-8 bytes), or None/None when any row group carries no
+    min/max — parquet-mr omits binary min/max once their sizes sum to 4 KB."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(file_path)
+    i = md.schema.names.index(col)
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(i).statistics
+        if st is None or not st.has_min_max:
+            return md.num_rows, None, None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return md.num_rows, lo, hi
 
 
 def _commit_manifest(
-    path: str, files: list[dict], operation: str, marker: str | None = None
+    path: str,
+    files: list[dict],
+    operation: str,
+    schema: dict | None,
+    marker: str | None = None,
 ) -> int:
     """Atomically commit ``files`` (the snapshot's FULL file set) as a new
     manifest and flip ``current`` to it; returns the new snapshot id.
+
+    ``schema`` is the read schema of every file in ``files`` (StructType
+    JSON), or None when they may differ — readers then infer it.
 
     ``marker`` is an optional idempotence token stored IN the manifest —
     atomic with the commit itself, so a writer that checks for its marker
     before committing gets exactly-once semantics with no side ledger
     (the streaming sink's batch-replay guard)."""
     parent = _current_snapshot_id(path)
+    meta = _meta_dir(path)
+    os.makedirs(meta, exist_ok=True)
     # ids must be globally fresh, not parent+1: after a rollback the current
     # pointer is an OLD snapshot, and parent+1 would silently clobber an
     # existing manifest (breaking 'later snapshots stay readable')
-    existing = [m["snapshot_id"] for m in snapshot_history(path)] or [0]
-    snap_id = max(existing) + 1
+    existing = [
+        int(fn[len("snap-") : -len(".json")])
+        for fn in os.listdir(meta)
+        if fn.startswith("snap-") and fn.endswith(".json")
+    ]
+    snap_id = max(existing, default=0) + 1
     manifest = {
         "snapshot_id": snap_id,
         "parent_id": parent,
@@ -142,9 +165,8 @@ def _commit_manifest(
         "marker": marker,
         "files": files,
         "total_rows": sum(f["n_rows"] for f in files),
+        "schema": schema,
     }
-    meta = _meta_dir(path)
-    os.makedirs(meta, exist_ok=True)
     nonce = uuid.uuid4().hex[:12]
     tmp = os.path.join(meta, f".snap-{snap_id}.json.{nonce}")
     with open(tmp, "w") as f:
@@ -169,14 +191,29 @@ def write_graph_snapshot(
     rebuild) while leaving every prior snapshot readable until expired."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown mode {mode!r}")
-    spark = triples.sparkSession
     out = triples.withColumn("pred_bucket", F.pmod(F.hash("pred"), F.lit(N_BUCKETS)))
-    files = _write_data_files(spark, out, path)
+    files = _write_data_files(out, path)
+    # the schema as a parquet read returns it: every field nullable
+    schema = StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in triples.schema]
+    ).jsonValue()
     carried = []
     parent = _current_snapshot_id(path)
     if mode == "append" and parent is not None:
-        carried = _load_manifest(path, parent)["files"]
-    return _commit_manifest(path, carried + files, operation=mode, marker=marker)
+        man = _load_manifest(path, parent)
+        carried = man["files"]
+        if carried and man.get("schema") != schema:
+            schema = None  # mixed (or unrecorded) file schemas: readers infer
+    return _commit_manifest(
+        path, carried + files, operation=mode, schema=schema, marker=marker
+    )
+
+
+def _scan(spark: SparkSession, paths: list[str], schema: dict | None) -> DataFrame:
+    """Read data files by explicit path with the manifest's schema: no
+    footer-inference job.  Explicit file paths get no partition columns."""
+    reader = spark.read if schema is None else spark.read.schema(StructType.fromJson(schema))
+    return reader.parquet(*paths)
 
 
 def read_graph_at(
@@ -195,7 +232,7 @@ def read_graph_at(
     ``subj_range=(lo, hi)`` (inclusive) prunes via the per-file subj
     min/max bounds the writer records (Iceberg column-stats skipping) AND
     applies the row filter, so the result is exact whether or not a file
-    carries bounds (stats-less files from old manifests are kept).  The
+    carries bounds (files recorded with None bounds are kept).  The
     pruning pays off after compact_table's subject clustering — appends
     write near-random subj ranges, compaction sorts within shards so each
     file covers a tight range."""
@@ -220,7 +257,7 @@ def read_graph_at(
 
         out = spark.createDataFrame([], TRIPLES_SCHEMA)
     else:
-        out = spark.read.parquet(*[f["path"] for f in files])
+        out = _scan(spark, [f["path"] for f in files], manifest.get("schema"))
     if subj_range is not None:
         out = out.filter(F.col("subj").between(subj_range[0], subj_range[1]))
     return out
@@ -294,7 +331,8 @@ def snapshot_history(path: str) -> list[dict]:
     out = []
     for fn in sorted(os.listdir(meta)):
         if fn.startswith("snap-") and fn.endswith(".json"):
-            m = json.load(open(os.path.join(meta, fn)))
+            with open(os.path.join(meta, fn)) as f:
+                m = json.load(f)
             out.append(
                 {
                     "snapshot_id": m["snapshot_id"],
@@ -369,7 +407,8 @@ def compact_table(
     cur = _current_snapshot_id(path)
     if cur is None:
         raise FileNotFoundError(f"no current snapshot at {path}")
-    files = _load_manifest(path, cur)["files"]
+    man = _load_manifest(path, cur)
+    files = man["files"]
     by_bucket: dict[int, list[dict]] = {}
     for f in files:
         if f["n_rows"] < target_file_rows:
@@ -384,9 +423,8 @@ def compact_table(
         b: max(1, -(-sum(f["n_rows"] for f in fs) // target_file_rows))
         for b, fs in rewrite.items()
     }
-    # direct-path reads skip partition-dir inference, so the frame is plain
-    # TRIPLES_SCHEMA; the bucket re-derives bit-identically from pred
-    df = spark.read.parquet(*sorted(doomed)).withColumn(
+    # the bucket re-derives bit-identically from pred
+    df = _scan(spark, sorted(doomed), man.get("schema")).withColumn(
         "pred_bucket", F.pmod(F.hash("pred"), F.lit(N_BUCKETS))
     )
     n_shards = sum(shards.values())
@@ -415,11 +453,11 @@ def compact_table(
         packed = salted.repartition(
             n_shards, F.col("pred_bucket"), F.col("_shard")
         ).drop("_shard")
-    new_files = _write_data_files(
-        spark, packed, path, max_records_per_file=target_file_rows
-    )
+    new_files = _write_data_files(packed, path, max_records_per_file=target_file_rows)
     carried = [f for f in files if f["path"] not in doomed]
-    return _commit_manifest(path, carried + new_files, operation="compact")
+    return _commit_manifest(
+        path, carried + new_files, operation="compact", schema=man.get("schema")
+    )
 
 
 def expire_snapshots(path: str, keep_last: int = 2) -> list[str]:

@@ -20,8 +20,8 @@ _LANG_MARKERS = {
 
 def _marker_count(lang: str):
     pat = r"\b(" + "|".join(_LANG_MARKERS[lang]) + r")\b"
-    # regexp_count == size(regexp_extract_all(..)) without building the
-    # matched-substring array (r7 perf; same non-overlapping match count)
+    # non-overlapping match count; Spark plans regexp_count as
+    # size(regexp_extract_all(.., 0)), so the match array is still built
     return F.regexp_count(F.lower(F.col("text")), F.lit(pat))
 
 
@@ -65,9 +65,9 @@ def quality_scores(documents: DataFrame, extra_cols: tuple = ()) -> DataFrame:
     # PERF (r7, guide §1.2 per-task work): counting characters of a fixed
     # ASCII set via regexp_replace('[^...]') pays the regex engine per char
     # plus a result-string build; length - length(translate(del set)) counts
-    # the identical characters in one codegen'd pass.  regexp_count replaces
-    # size(regexp_extract_all(...)): same non-overlapping match count without
-    # materializing the matched-substring array.  Values are bit-identical.
+    # the identical characters in one codegen'd pass.  Values are
+    # bit-identical.  (regexp_count is only a spelling: Spark plans it as
+    # size(regexp_extract_all(.., 0)).)
     n_punct = n_chars - F.length(F.translate("text", ".,;:!?", ""))
     n_stop = F.regexp_count(
         F.lower("text"), F.lit(r"\b(the|and|of|a|to|in|is|it)\b")

@@ -317,3 +317,159 @@ class TestColumnStatsPruning:
             map(tuple, read_graph_at(spark, path, subj_range=(lo, hi)).collect())
         )
         assert ranged == full
+
+
+
+def _file_aggs(spark, paths, subj=None):
+    """{path: (rows, min subj, max subj)} computed by Spark over the files
+    (only files holding ``subj`` when given) — the oracle for the footer
+    stats the writer records."""
+    import urllib.parse
+
+    df = spark.read.parquet(*paths)
+    if subj is not None:
+        df = df.filter(F.col("subj") == subj)
+    rows = (
+        df.groupBy(F.input_file_name().alias("f"))
+        .agg(F.count("*").alias("n"), F.min("subj").alias("lo"), F.max("subj").alias("hi"))
+        .collect()
+    )
+    return {
+        os.path.normpath(urllib.parse.unquote(urllib.parse.urlparse(r["f"]).path)): (
+            r["n"],
+            r["lo"],
+            r["hi"],
+        )
+        for r in rows
+    }
+
+
+class TestFooterStats:
+    # empty, non-BMP, combining (decomposed and precomposed e-acute, a lone
+    # combining mark), U+FFFF, U+FFFD and ASCII edge subjects
+    HOSTILE = [
+        "",
+        chr(0x1D518) + "x",
+        chr(0x1F600),
+        "e" + chr(0x301),
+        chr(0xE9),
+        chr(0x301),
+        chr(0xFFFF),
+        chr(0xFFFD),
+        "a",
+        "z",
+        chr(0x7F),
+    ]
+    # over parquet-mr's 4 KB binary-stats limit, and above every other
+    # subject, so it is the max of whatever file holds it
+    LONG = chr(0x10FFFF) + "x" * 5000
+
+    def _write(self, spark, path):
+        rows = [
+            (s, f"http://dbpedia.org/ontology/p{i % 4}", f"o{i}", None)
+            for i, s in enumerate(self.HOSTILE * 3)
+        ] + [(self.LONG, "http://dbpedia.org/ontology/p0", "long", None)]
+        df = spark.createDataFrame(rows, "subj string, pred string, obj string, obj_dt string")
+        return rows, write_graph_snapshot(df.repartition(2), path)
+
+    def test_footer_stats_equal_spark_aggregates(self, spark, tmp_path):
+        from list_extractor_spark.engine.snapshots import _load_manifest
+
+        path = str(tmp_path / "graph")
+        _, sid = self._write(spark, path)
+        files = _load_manifest(path, sid)["files"]
+        paths = [f["path"] for f in files]
+        aggs = _file_aggs(spark, paths)
+        long_files = set(_file_aggs(spark, paths, subj=self.LONG))
+        assert sorted(aggs) == paths and long_files
+        for f in files:
+            n, lo, hi = aggs[f["path"]]
+            assert f["n_rows"] == n
+            if f["path"] in long_files:
+                assert (f["subj_min"], f["subj_max"]) == (None, None)
+            else:
+                assert (f["subj_min"], f["subj_max"]) == (lo, hi)
+        assert len(long_files) < len(files)
+
+    def test_subj_range_reads_stay_exact(self, spark, tmp_path):
+        path = str(tmp_path / "graph")
+        rows, _ = self._write(spark, path)
+        top = chr(0x10FFFF)
+        for lo, hi in [
+            ("", ""),
+            ("", "a"),
+            ("e", chr(0xFFFF)),
+            (chr(0xFFFF), top),
+            (top, top + "y"),
+            (chr(0x301), chr(0xE9)),
+        ]:
+            got = read_graph_at(spark, path, subj_range=(lo, hi)).collect()
+            want = [r for r in rows if lo <= r[0] <= hi]
+            assert sorted(map(tuple, got)) == sorted(want), (lo, hi)
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), ids of the Spark jobs fn ran), via a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"snapshots-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the async listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+class TestMetadataJobs:
+    def _wide(self, spark, tag):
+        # 100 predicates over 2 write tasks: 2 files in most of the 16 buckets
+        return _triples(spark, tag, n=400).withColumn(
+            "pred", F.concat(F.lit("http://dbpedia.org/ontology/q"), F.col("obj").substr(-2, 2))
+        ).repartition(2).localCheckpoint()
+
+    def test_commit_runs_only_the_write_job(self, spark, tmp_path):
+        path = str(tmp_path / "graph")
+        frame = self._wide(spark, "a")
+        sid, jobs = _jobs_run_by(spark, lambda: write_graph_snapshot(frame, path))
+        assert sid == 1 and len(jobs) == 1
+        sid, jobs = _jobs_run_by(spark, lambda: write_graph_snapshot(frame, path))
+        assert sid == 2 and len(jobs) == 1
+
+    def test_read_plans_with_no_job_and_the_inferred_schema(self, spark, tmp_path):
+        from list_extractor_spark.engine.snapshots import _load_manifest
+
+        path = str(tmp_path / "graph")
+        for tag in ("a", "b"):
+            write_graph_snapshot(self._wide(spark, tag), path)
+        files = _load_manifest(path, 2)["files"]
+        assert len(files) >= 33  # past Spark's parallel-listing threshold
+        df, jobs = _jobs_run_by(spark, lambda: read_graph_at(spark, path))
+        assert jobs == []
+        inferred = spark.read.parquet(*[f["path"] for f in files]).schema
+        assert df.schema == inferred
+        assert [f.nullable for f in df.schema] == [True] * 4
+        assert df.count() == 800
+
+        # a manifest without the schema key (older tables) still reads
+        man_path = os.path.join(path, "metadata", "snap-2.json")
+        with open(man_path) as f:
+            man = json.load(f)
+        del man["schema"]
+        with open(man_path, "w") as f:
+            json.dump(man, f)
+        old = read_graph_at(spark, path)
+        assert old.schema == inferred and old.count() == 800
+
+    def test_append_with_another_schema_records_none(self, spark, tmp_path):
+        from list_extractor_spark.engine.snapshots import _load_manifest
+
+        path = str(tmp_path / "graph")
+        write_graph_snapshot(_triples(spark, "a"), path)
+        assert _load_manifest(path, 1)["schema"] is not None
+        write_graph_snapshot(_triples(spark, "b").withColumn("extra", F.lit(1)), path)
+        assert _load_manifest(path, 2)["schema"] is None
+        assert read_graph_at(spark, path).count() == 40
