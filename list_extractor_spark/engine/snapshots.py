@@ -283,16 +283,14 @@ def verify_table(path: str) -> dict:
     orphans (a crashed writer's leftovers — expected, reclaimable).
     Returns {missing_files, orphan_files, bad_manifests}; an intact table
     has empty missing_files and bad_manifests."""
-    hist = snapshot_history(path)
     missing, bad = [], []
     live: set = set()
     seen_ids: set = set()
-    for m in hist:
-        sid = m["snapshot_id"]
+    for man in _manifests(path):
+        sid = man["snapshot_id"]
         if sid in seen_ids:
             bad.append(f"duplicate snapshot id {sid}")
         seen_ids.add(sid)
-        man = _load_manifest(path, sid)
         if man["total_rows"] != sum(f["n_rows"] for f in man["files"]):
             bad.append(f"snap-{sid}: total_rows != sum(files)")
         for f in man["files"]:
@@ -321,30 +319,35 @@ def verify_table(path: str) -> dict:
     }
 
 
-def snapshot_history(path: str) -> list[dict]:
-    """The snapshot log, oldest first: (snapshot_id, parent_id, operation,
-    ts, total_rows, n_files) — the reference's run-accumulation made
-    queryable."""
+def _manifests(path: str) -> list[dict]:
+    """Every manifest of the table, parsed once, oldest first."""
     meta = _meta_dir(path)
     if not os.path.isdir(meta):
         return []
     out = []
-    for fn in sorted(os.listdir(meta)):
+    for fn in os.listdir(meta):
         if fn.startswith("snap-") and fn.endswith(".json"):
             with open(os.path.join(meta, fn)) as f:
-                m = json.load(f)
-            out.append(
-                {
-                    "snapshot_id": m["snapshot_id"],
-                    "parent_id": m["parent_id"],
-                    "operation": m["operation"],
-                    "marker": m.get("marker"),
-                    "ts": m["ts"],
-                    "total_rows": m["total_rows"],
-                    "n_files": len(m["files"]),
-                }
-            )
+                out.append(json.load(f))
     return sorted(out, key=lambda m: m["snapshot_id"])
+
+
+def snapshot_history(path: str) -> list[dict]:
+    """The snapshot log, oldest first: (snapshot_id, parent_id, operation,
+    ts, total_rows, n_files) — the reference's run-accumulation made
+    queryable."""
+    return [
+        {
+            "snapshot_id": m["snapshot_id"],
+            "parent_id": m["parent_id"],
+            "operation": m["operation"],
+            "marker": m.get("marker"),
+            "ts": m["ts"],
+            "total_rows": m["total_rows"],
+            "n_files": len(m["files"]),
+        }
+        for m in _manifests(path)
+    ]
 
 
 def marker_committed(path: str, marker: str) -> bool:
@@ -465,23 +468,21 @@ def expire_snapshots(path: str, keep_last: int = 2) -> list[str]:
     data files no surviving manifest references; returns deleted paths.
     Never touches the current snapshot's lineage (current and its ancestors
     within keep_last)."""
-    hist = snapshot_history(path)
-    if len(hist) <= keep_last:
+    mans = _manifests(path)
+    if len(mans) <= keep_last:
         return []
-    keep = {m["snapshot_id"] for m in hist[-keep_last:]}
+    keep = {m["snapshot_id"] for m in mans[-keep_last:]}
     cur = _current_snapshot_id(path)
     if cur is not None:
         keep.add(cur)
-    live: set = set()
-    for sid in keep:
-        live.update(f["path"] for f in _load_manifest(path, sid)["files"])
+    live = {f["path"] for m in mans if m["snapshot_id"] in keep for f in m["files"]}
     deleted = []
     meta = _meta_dir(path)
-    for m in hist:
+    for m in mans:
         sid = m["snapshot_id"]
         if sid in keep:
             continue
-        for f in _load_manifest(path, sid)["files"]:
+        for f in m["files"]:
             if f["path"] not in live and os.path.exists(f["path"]):
                 os.remove(f["path"])
                 deleted.append(f["path"])

@@ -521,6 +521,50 @@ def minhash_doc_stats(
     ).mapInPandas(run, schema=out_schema)
 
 
+def _common_udf():
+    """|set_a & set_b| over two sorted distinct int-array columns as a
+    pandas UDF, built at plan time (a module-level decorator needs a live
+    SparkContext at import).
+
+    PERF (r7, guide §4.4): the jaccard filter references this UDF's output,
+    and filter pushdown duplicates the expression — the plan carried TWO
+    ArrowEvalPython nodes, running the set intersection twice per candidate
+    pair.  Nondeterministic blocks the duplication (one node, same rows)."""
+
+    @F.pandas_udf("int")
+    def common(ha: pd.Series, hb: pd.Series) -> pd.Series:
+        import numpy as np
+
+        return pd.Series(
+            [len(np.intersect1d(a, b, assume_unique=True)) for a, b in zip(ha, hb)],
+            dtype="int32",
+        )
+
+    return common.asNondeterministic()
+
+
+def _verify_pairs(cand: DataFrame, stats: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of candidate (doc_a, doc_b) pairs from the sh_hash sets
+    and n_sh sizes of one minhash_doc_stats frame; pairs below
+    ``threshold`` drop."""
+    side = lambda s: stats.select(  # noqa: E731
+        F.col("doc_id").alias(f"doc_{s}"),
+        F.col("sh_hash").alias(f"h_{s}"),
+        F.col("n_sh").alias(f"n_{s}"),
+    )
+    return (
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .withColumn("common", _common_udf()("h_a", "h_b"))
+        .withColumn(
+            "jaccard",
+            F.round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
 def minhash_lsh_pairs(
     documents: DataFrame,
     k: int = 16,
@@ -590,37 +634,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    @F.pandas_udf("int")
-    def _common(ha: pd.Series, hb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(
-            [len(np.intersect1d(a, b, assume_unique=True)) for a, b in zip(ha, hb)],
-            dtype="int32",
-        )
-
-    # PERF (r7, guide §4.4): the jaccard filter references this UDF's output,
-    # and filter pushdown duplicates the expression — the plan carried TWO
-    # ArrowEvalPython nodes, running the set intersection twice per candidate
-    # pair.  Nondeterministic blocks the duplication (one node, same rows).
-    _common = _common.asNondeterministic()
-
-    side = lambda s: stats.select(  # noqa: E731
-        F.col("doc_id").alias(f"doc_{s}"),
-        F.col("sh_hash").alias(f"h_{s}"),
-        F.col("n_sh").alias(f"n_{s}"),
-    )
-    return (
-        cand.join(side("a"), "doc_a")
-        .join(side("b"), "doc_b")
-        .withColumn("common", _common("h_a", "h_b"))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _verify_pairs(cand, stats, threshold)
 
 
 def minhash_incremental_pairs(
@@ -640,11 +654,19 @@ def minhash_incremental_pairs(
     in band buckets an incoming document actually collides with, so the
     cost tracks the BATCH (m x bucket occupancy), not the corpus.
 
-    Same signature machinery as minhash_lsh_pairs strategy="arrow" (one
-    narrow minhash_doc_stats pass per side, band-bucket candidates, exact
-    Jaccard verify on candidate pairs only); ``bucket_cap`` applies to the
-    COMBINED bucket membership, mirroring the self-join form's hub guard.
-    doc_ids must be disjoint across sides (they name different documents).
+    Same signature machinery as minhash_lsh_pairs strategy="arrow", in ONE
+    pass: minhash_doc_stats runs on each side (corpus first), the two
+    frames are tagged ``is_corpus`` and unioned, and the union is
+    checkpointed once.  Candidates come from ONE band-probe join of the
+    incoming band rows against the combined band table on (band_id, bh),
+    keeping a probe hit when the other doc is a corpus doc or a larger
+    incoming doc_id (only corpus hits when ``within_incoming`` is False);
+    exact Jaccard is verified on candidate pairs only.  ``bucket_cap``
+    applies to the COMBINED bucket membership, mirroring the self-join
+    form's hub guard.  doc_ids must be disjoint across sides (they name
+    different documents).  Jobs: the checkpoint runs one, plus one per side
+    that spread_scan repartitions; materializing the pairs runs one per
+    adaptive query stage (5-6 on a local master).
 
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, both cross-side and
     (when ``within_incoming``) batch-internal pairs — feed dedup_incoming
@@ -653,85 +675,45 @@ def minhash_incremental_pairs(
 
     # spread (r7): single-file sources otherwise serialize each signature
     # pass on one core — no-op when the inputs are already split
-    stats_c = minhash_doc_stats(spread_scan(corpus), k=k, bands=bands).localCheckpoint(
-        eager=True
+    stats = (
+        minhash_doc_stats(spread_scan(corpus), k=k, bands=bands)
+        .withColumn("is_corpus", F.lit(True))
+        .unionByName(
+            minhash_doc_stats(spread_scan(incoming), k=k, bands=bands)
+            .withColumn("is_corpus", F.lit(False))
+        )
+        .localCheckpoint(eager=True)
     )
-    stats_i = minhash_doc_stats(spread_scan(incoming), k=k, bands=bands).localCheckpoint(
-        eager=True
-    )
-
-    def banded(stats, side):
-        return stats.select(
+    banded = _cap_postings(
+        stats.select(
             "doc_id",
-            F.lit(side).alias("side"),
+            "is_corpus",
             F.stack(
                 F.lit(bands),
                 *[x for b in range(bands) for x in (F.lit(b), F.col(f"bh_{b}"))],
             ).alias("band_id", "bh"),
-        )
-
-    both = _cap_postings(
-        banded(stats_c, "c").unionByName(banded(stats_i, "i")),
+        ),
         ["band_id", "bh"],
         bucket_cap,
     )
-    b_c = both.filter(F.col("side") == "c").drop("side")
-    b_i = both.filter(F.col("side") == "i").drop("side")
+    hit = F.col("y.is_corpus")
+    if within_incoming:
+        hit = hit | (F.col("x.doc_id") < F.col("y.doc_id"))
     # hint("merge") (r7): same estimate-underflow broadcast hazard as the
     # self-join form — see minhash_lsh_pairs; the cap window's sort on
     # (band_id, bh) is reused by the sort-merge join
-    cross = (
-        b_i.alias("x")
-        .join(b_c.hint("merge").alias("y"), ["band_id", "bh"])
+    cand = (
+        banded.filter(~F.col("is_corpus"))
+        .alias("x")
+        .join(banded.hint("merge").alias("y"), ["band_id", "bh"])
+        .filter(hit)
         .select(
             F.least("x.doc_id", "y.doc_id").alias("doc_a"),
             F.greatest("x.doc_id", "y.doc_id").alias("doc_b"),
         )
+        .distinct()
     )
-    cand = cross
-    if within_incoming:
-        within = (
-            b_i.alias("x")
-            .join(b_i.hint("merge").alias("y"), ["band_id", "bh"])
-            .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-            .select(
-                F.col("x.doc_id").alias("doc_a"),
-                F.col("y.doc_id").alias("doc_b"),
-            )
-        )
-        cand = cand.unionByName(within)
-    cand = cand.distinct()
-
-    @F.pandas_udf("int")
-    def _common(ha: pd.Series, hb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(
-            [len(np.intersect1d(a, b, assume_unique=True)) for a, b in zip(ha, hb)],
-            dtype="int32",
-        )
-
-    # one ArrowEvalPython node, not two (r7, guide §4.4 — see
-    # minhash_lsh_pairs): the jaccard filter otherwise duplicates the UDF
-    _common = _common.asNondeterministic()
-
-    stats_all = stats_c.unionByName(stats_i)
-    side = lambda s: stats_all.select(  # noqa: E731
-        F.col("doc_id").alias(f"doc_{s}"),
-        F.col("sh_hash").alias(f"h_{s}"),
-        F.col("n_sh").alias(f"n_{s}"),
-    )
-    return (
-        cand.join(side("a"), "doc_a")
-        .join(side("b"), "doc_b")
-        .withColumn("common", _common("h_a", "h_b"))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _verify_pairs(cand, stats, threshold)
 
 
 def dedup_incoming(
@@ -748,7 +730,16 @@ def dedup_incoming(
     a non-survivor of a within-batch near-dup cluster (connected components
     + keep_min via near_dup_resolve, so chains resolve consistently instead
     of greedily).  Corpus rows are never re-judged — the operator's whole
-    point is that the accumulated corpus is immutable history."""
+    point is that the accumulated corpus is immutable history.
+
+    The corpus is read once, by the signature pass of
+    minhash_incremental_pairs.  A pair's sides come from membership in the
+    batch's own id set (batch-sized, broadcast): a pair with one incoming
+    endpoint drops that endpoint, a pair with two goes to
+    near_dup_resolve.  One collect of the result runs 17 Spark jobs on
+    in-memory inputs and 18 on single-file parquet sources (local master;
+    tests/test_tda.py bounds the count).  NULL-text docs and docs with
+    fewer than 3 tokens have no signature, pair with nothing and keep."""
     pairs = minhash_incremental_pairs(
         corpus,
         incoming,
@@ -760,30 +751,28 @@ def dedup_incoming(
     inc_ids = incoming.select(
         F.col("doc_id").cast("string").alias("doc_id")
     ).distinct()
-    corpus_ids = corpus.select(
-        F.col("doc_id").cast("string").alias("doc_id")
-    ).distinct()
-    # an incoming doc paired with ANY corpus doc drops unconditionally
-    vs_corpus = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-        .join(corpus_ids, "doc_id", "left_semi")  # the corpus member
-    )
-    dropped_cross = (
-        pairs.join(vs_corpus.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .select(F.col("doc_b").alias("doc_id"))
-        .unionByName(
-            pairs.join(
-                vs_corpus.withColumnRenamed("doc_id", "doc_b"), "doc_b"
-            ).select(F.col("doc_a").alias("doc_id"))
+
+    def is_incoming(end):
+        return F.broadcast(
+            inc_ids.select(F.col("doc_id").alias(f"doc_{end}"), F.lit(True).alias(f"{end}_in"))
         )
-        .join(inc_ids, "doc_id", "left_semi")
-        .distinct()
+
+    sided = (
+        pairs.join(is_incoming("a"), "doc_a", "left")
+        .join(is_incoming("b"), "doc_b", "left")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.coalesce("a_in", F.lit(False)).alias("a_in"),
+            F.coalesce("b_in", F.lit(False)).alias("b_in"),
+        )
+    )
+    # one incoming endpoint: it near-dups the corpus and drops unconditionally
+    dropped_cross = sided.filter(F.col("a_in") != F.col("b_in")).select(
+        F.when(F.col("a_in"), F.col("doc_a")).otherwise(F.col("doc_b")).alias("doc_id")
     )
     # within-batch pairs resolve by CC + keep_min
-    within = pairs.join(
-        corpus_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_anti"
-    ).join(corpus_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_anti")
+    within = sided.filter(F.col("a_in") & F.col("b_in")).select("doc_a", "doc_b")
     dropped_within = near_dup_resolve(within).filter(~F.col("keep")).select(
         "doc_id"
     )
@@ -1091,17 +1080,19 @@ def near_dup_resolve(
         F.col("doc_b").cast("string").alias("v"),
     )
     # materialize the edge set ONCE up front: `pairs` is usually the tail of
-    # an expensive lazy plan (a full minhash/simhash pipeline), and every
-    # consumer below — the row estimate, the fast path's collect, the loop's
-    # per-round joins — would otherwise re-run that whole pipeline.  The
-    # loop needs the edges resident anyway, so the checkpoint is the floor.
+    # an expensive lazy plan (a full minhash/simhash pipeline), and both
+    # consumers below — the bounded collect and the loop's per-round joins —
+    # would otherwise re-run that whole pipeline.  The loop needs the edges
+    # resident anyway, so the checkpoint is the floor.
     edges = edges.localCheckpoint(eager=True)
     spark = pairs.sparkSession
-    n_pairs = _estimate_pair_rows(edges)
-    if n_pairs <= driver_threshold:
+    # one bounded collect both decides the path and, when the pair list
+    # fits, is the fast path's whole input
+    head = edges.limit(driver_threshold + 1).collect()
+    if len(head) <= driver_threshold:
         from ..core.components import components
 
-        comp = components((r["u"], r["v"]) for r in edges.collect())
+        comp = components((r["u"], r["v"]) for r in head)
         import pandas as pd
 
         # pandas-backed -> LocalRelation WITH stats (downstream joins size it)
@@ -1205,19 +1196,6 @@ def near_dup_resolve(
             .select("doc_id", "cluster_id", "keep")
         )
     raise ValueError(f"unknown policy {policy!r}")
-
-
-def _estimate_pair_rows(edges: DataFrame) -> int:
-    """Exact bounded row count for the fast-path decision (same envelope as
-    canonicalize._estimate_edge_rows: the fast path ends in a collect, so
-    byte statistics are not safe — LocalRelation exact counts are free,
-    everything else pays one LIMIT-bounded count)."""
-    from ..engine.stats import local_relation_rows
-
-    n = local_relation_rows(edges)
-    if n is not None:
-        return n
-    return edges.limit(1_000_000).count()
 
 
 def dedup_corpus(

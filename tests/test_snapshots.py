@@ -129,6 +129,22 @@ def test_verify_table_reports_missing_and_orphans(spark, tmp_path):
     assert rep["orphan_files"] == [orphan]
 
 
+def test_verify_and_expire_parse_each_manifest_once(spark, tmp_path, monkeypatch):
+    from list_extractor_spark.engine import snapshots
+
+    path = str(tmp_path / "graph")
+    for tag in "abc":
+        write_graph_snapshot(_triples(spark, tag), path)
+    loads = []
+    real = json.load
+    monkeypatch.setattr(snapshots.json, "load", lambda f: loads.append(f.name) or real(f))
+    assert verify_table(path)["bad_manifests"] == []
+    assert len(loads) == len(set(loads)) == 3
+    loads.clear()
+    expire_snapshots(path, keep_last=1)
+    assert len(loads) == len(set(loads)) == 3
+
+
 def test_commit_after_rollback_gets_fresh_id(spark, tmp_path):
     """A commit made after rollback() must take a NEW snapshot id, not
     parent+1 — reusing an id would clobber the rolled-past snapshot's

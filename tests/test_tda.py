@@ -812,6 +812,120 @@ def test_dedup_incoming_verdicts(spark):
     assert got == {"n1": False, "n2": True, "n3": False, "n4": True}
 
 
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs fn ran), via a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"tda-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the async listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_incoming_job_count(spark):
+    """One verdict collect runs at most 17 Spark jobs: one checkpoint of
+    both sides' signatures, one band-probe join, and pair sides taken from
+    the batch's own ids (the corpus is read once).  NULL-text and 2-token
+    docs have no signature and keep."""
+    t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    t2 = "one two three four five six seven eight nine ten eleven"
+    corpus = spark.createDataFrame([("c1", t1)], "doc_id string, text string")
+    incoming = spark.createDataFrame(
+        [("n1", t1), ("n2", t2), ("n3", t2), ("n4", "fresh standalone words"),
+         ("n5", None), ("n6", "two tokens")],
+        "doc_id string, text string",
+    )
+    rows, n_jobs = _jobs_run_by(
+        spark, lambda: dedup.dedup_incoming(corpus, incoming, threshold=0.5).collect()
+    )
+    assert {r["doc_id"]: r["keep"] for r in rows} == {
+        "n1": False, "n2": True, "n3": False, "n4": True, "n5": True, "n6": True
+    }
+    assert n_jobs <= 17, n_jobs
+
+
+def test_minhash_incremental_equals_self_join_minus_corpus_pairs(spark):
+    """Seeded: the incremental pairs are exactly minhash_lsh_pairs over
+    corpus + incoming minus the corpus x corpus pairs (and minus the
+    incoming x incoming pairs when within_incoming=False), with planted
+    exact and near copies on both sides and a hub of near copies whose
+    buckets bucket_cap drops."""
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(400)]
+    text = lambda n: " ".join(rng.choice(vocab) for _ in range(n))  # noqa: E731
+
+    def near(t):
+        toks = t.split()
+        toks[rng.randrange(len(toks))] = rng.choice(vocab)
+        return " ".join(toks)
+
+    hub = text(40)
+    corpus = [(f"c{i:02d}", text(30)) for i in range(30)]
+    corpus += [(f"ch{i}", near(hub)) for i in range(4)]
+    incoming = [(f"n{i:02d}", text(30)) for i in range(20)]
+    incoming += [(f"nh{i}", near(hub)) for i in range(4)]
+    incoming += [(f"x{i}", corpus[i][1]) for i in range(3)]  # exact, cross-side
+    incoming += [(f"y{i}", near(corpus[10 + i][1])) for i in range(3)]  # near, cross-side
+    incoming += [(f"z{i}", incoming[i][1]) for i in range(3)]  # exact, within
+    schema = "doc_id string, text string"
+    c_df = spark.createDataFrame(corpus, schema)
+    i_df = spark.createDataFrame(incoming, schema)
+    in_corpus = {d for d, _ in corpus}
+    args = {"k": 16, "bands": 8, "threshold": 0.5}
+
+    def pairs(df):
+        return {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in df.collect()}
+
+    hub_pairs = {}
+    for cap in (None, 5):
+        full = pairs(dedup.minhash_lsh_pairs(c_df.unionByName(i_df), bucket_cap=cap, **args))
+        want = {p for p in full if not (p[0] in in_corpus and p[1] in in_corpus)}
+        got = pairs(dedup.minhash_incremental_pairs(c_df, i_df, bucket_cap=cap, **args))
+        assert got == want, cap
+        cross = {p for p in want if (p[0] in in_corpus) != (p[1] in in_corpus)}
+        assert cross and cross != want  # both kinds of pair occur
+        assert pairs(
+            dedup.minhash_incremental_pairs(
+                c_df, i_df, bucket_cap=cap, within_incoming=False, **args
+            )
+        ) == cross, cap
+        hub_pairs[cap] = {p for p in want if p[0].startswith(("ch", "nh"))}
+    # the hub pairs up widely, and the cap drops some of its buckets
+    assert len(hub_pairs[None]) > 10 and hub_pairs[5] < hub_pairs[None]
+
+
+def test_dedup_incoming_null_short_and_chain(spark):
+    """NULL, empty and < 3-token docs keep; in a within-batch chain
+    a~b~c (a !~ c) only the cluster minimum a survives."""
+    words = [f"t{i}" for i in range(60)]
+    span = lambda lo: " ".join(words[lo : lo + 40])  # noqa: E731
+    corpus = spark.createDataFrame(
+        [("c1", "unrelated corpus words that pair with nothing here"), ("c2", None)],
+        "doc_id string, text string",
+    )
+    incoming = spark.createDataFrame(
+        [("a", span(0)), ("b", span(5)), ("c", span(10)),
+         ("n", None), ("e", ""), ("s", "two tokens")],
+        "doc_id string, text string",
+    )
+    args = {"k": 16, "bands": 8, "threshold": 0.7}
+    pairs = {
+        (r["doc_a"], r["doc_b"])
+        for r in dedup.minhash_incremental_pairs(corpus, incoming, **args).collect()
+    }
+    assert pairs == {("a", "b"), ("b", "c")}  # the chain: a and c do not pair
+    got = {r["doc_id"]: r["keep"] for r in dedup.dedup_incoming(corpus, incoming, **args).collect()}
+    assert got == {"a": True, "b": False, "c": False, "n": True, "e": True, "s": True}
+
+
 def test_mix_sources_random_configs_match_replica(spark):
     """Seeded-loop randomized check (same pattern as the CC property test —
     hypothesis would respawn Spark jobs per example): random corpora,
