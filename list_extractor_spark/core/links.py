@@ -8,10 +8,10 @@ pre-snapshotted tables:
     mention_index(lang, surface, wikidata_uri)   <- top-1 wbsearchentities
     sameas(wikidata_uri, dbpedia_uri)            <- owl:sameAs snapshot
 
-Inside the pandas UDF the *decision* (does this mention link?) uses broadcast
-dicts; the Spark pipeline additionally re-resolves mentions through a real
-broadcast-hash join (engine/linking.py) so the scale path is a join, not a
-driver-side dict.
+Inside the mapInArrow extract kernel (engine/extract.py) the *decision*
+(does this mention link?) uses broadcast dicts; the Spark pipeline
+additionally re-resolves mentions through a real broadcast-hash join
+(engine/linking.py) so the scale path is a join, not a driver-side dict.
 """
 
 from __future__ import annotations
@@ -41,9 +41,9 @@ MENTION_SENTINEL = "urn:mention:"
 
 
 class DeferredLinker(Linker):
-    """Linker used inside the Spark extract UDF: it *decides* link hits from a
-    broadcast membership set but defers URI resolution to the pipeline's
-    broadcast-hash join (engine/linking.py).
+    """Linker used inside the Spark extract kernel: it *decides* link hits
+    from a broadcast membership set but defers URI resolution to the
+    pipeline's broadcast-hash join (engine/linking.py).
 
     A hit returns the sentinel ``urn:mention:<lang>:<surface>``; the join stage
     replaces it with coalesce(dbpedia_uri, wikidata_uri).  dbpedia() returns

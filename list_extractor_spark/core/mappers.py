@@ -789,7 +789,8 @@ def extract_document(doc_id, res_class, lang, spans, linker=NULL_LINKER):
 
     Returns (triples, stats) where triples is the set of
     (subj, pred, obj, obj_dt) and stats = (sections, items, extracted).
-    This is the unit of work both the oracle and the Spark pandas UDF run.
+    This is the unit of work both the oracle and the Spark mapInArrow extract
+    kernel (engine/extract.py, shared by batch and streaming) run.
     """
     from .parser import parse_spans
 

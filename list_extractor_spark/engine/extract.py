@@ -2,11 +2,17 @@
 
 Replaces the reference's serial per-page loop (listExtractor.py:122-142:
 JVM subprocess per page + HTTP per element) with ONE Arrow-batched
-``mapInPandas`` pass that fuses parse (P1-P3), rule dispatch (D1-D3) and the
-mapper cascade (M1-M15) per document:
+``mapInArrow`` pass that fuses parse (P1-P3), rule dispatch (D1-D3) and the
+mapper cascade (M1-M15) per document.  The batch pipeline
+(engine/pipeline.py) and the streaming flow (streaming/stream_extract.py)
+run this same kernel; the per-document stats (``extract_metrics``) and the
+standalone parse stage (``parse_items``) are other emitters over it:
 
   * the span array stays whole inside one row, so the section-title state
     machine folds in document order with no shuffle and no explode;
+  * each Arrow batch's ``spans`` list column is flattened ONCE into its four
+    primitive child arrays and sliced per document, so no span becomes a
+    Python dict; a NULL or empty ``spans`` is an empty document;
   * per-document state the reference relies on (mapped_domains, sticky award
     status, the staff-vs-alumni within-page anti-join) is naturally scoped;
   * rule tables ride along as broadcast variables captured in the closure;
@@ -17,27 +23,25 @@ mapper cascade (M1-M15) per document:
     only a fixed-size bitmap ships to executors, never the index rows.
 
 Scale note: mega "List of ..." pages make single heavy rows.  The stage
-optionally pre-distributes by span count (repartitionByRange on n_spans) so a
-few hub documents don't serialize one task; AQE handles residual skew.
+optionally pre-distributes by span count (repartitionByRange on the spans'
+size) so a few hub documents don't serialize one task; AQE handles residual
+skew.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.extractors import dbr_ns, list_elem_clean
-from ..core.links import DeferredLinker, Linker, split_sentinel
+from ..core.links import DeferredLinker, split_sentinel
 from ..core.mappers import _mint, extract_document
 from ..core.parser import parse_spans
 from .schemas import CANDIDATES_SCHEMA, ITEMS_SCHEMA, METRICS_SCHEMA
 
-
-def _spans_from_cell(cell):
-    # Arrow hands the array<struct> column as a numpy array of dicts
-    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in cell]
+# the span tuple order core.parser.parse_spans folds over
+_SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
 
 
 def _sentinel_parts(subj: str):
@@ -53,155 +57,88 @@ def _sentinel_parts(subj: str):
     return ll, ls, _mint(list_elem_clean(ls), dbr_ns(ll))
 
 
-def extract_candidates(
-    documents: DataFrame,
-    linkable_keys=None,
-    full_linker: Linker | None = None,
-    skew_repartition: bool = False,
+def _map_documents(
+    documents: DataFrame, cols, schema, emit, linker=None, skew_repartition=False
 ) -> DataFrame:
-    """documents(doc_id, lang, res_class, spans[, res_target]) -> candidates.
+    """One mapInArrow pass: ``emit(linker, *row, spans)`` per document, where
+    ``row`` holds the ``cols`` values and ``spans`` the document's
+    (kind, text, media_ref, offset) tuples; it returns the document's output
+    rows as tuples in ``schema`` order.
 
-    ``linkable_keys``: broadcastable set of (lang, surface) mention keys; link
-    resolution is deferred to the join stage via sentinels.  Passing
-    ``full_linker`` instead resolves in-UDF (used by small-scale parity runs).
-    ``res_target``: optional redirect-resolved page id (defaults to doc_id).
-    """
-    sc = documents.sparkSession.sparkContext
-    if full_linker is not None:
-        b_linker = sc.broadcast(full_linker)
-        deferred = False
-    else:
-        b_linker = sc.broadcast(
-            DeferredLinker(linkable_keys if linkable_keys is not None else set())
-        )
-        deferred = True
-
-    if "res_target" not in documents.columns:
-        documents = documents.withColumn("res_target", F.col("doc_id"))
-    if "res_classes" not in documents.columns:
-        documents = documents.withColumn("res_classes", F.array("res_class"))
-
-    if skew_repartition:
-        documents = documents.withColumn("n_spans", F.size("spans")).repartitionByRange(
-            "n_spans", "doc_id"
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        linker = b_linker.value
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "subj": [],
-                "pred": [],
-                "obj": [],
-                "obj_dt": [],
-                "link_lang": [],
-                "link_surface": [],
-                "link_fallback": [],
-            }
-            for doc_id, lang, res_class, spans, res_target in zip(
-                pdf["doc_id"], pdf["lang"], pdf["res_classes"], pdf["spans"], pdf["res_target"]
-            ):
-                res_class = list(res_class)
-                triples, _stats = extract_document(
-                    res_target, res_class, lang, _spans_from_cell(spans), linker
-                )
-                for s, p, o, dt in triples:
-                    ll, ls, lf = (
-                        _sentinel_parts(s) if deferred else (None, None, None)
-                    )
-                    out["doc_id"].append(doc_id)
-                    out["subj"].append(s)
-                    out["pred"].append(p)
-                    out["obj"].append(o)
-                    out["obj_dt"].append(dt)
-                    out["link_lang"].append(ll)
-                    out["link_surface"].append(ls)
-                    out["link_fallback"].append(lf)
-            yield pd.DataFrame(out)
-
-    cols = [F.col(f.name) for f in CANDIDATES_SCHEMA.fields]
-    return documents.mapInPandas(run, schema=CANDIDATES_SCHEMA).select(*cols)
-
-
-def extract_candidates_arrow(
-    documents: DataFrame,
-    linkable_keys=None,
-    skew_repartition: bool = False,
-) -> DataFrame:
-    """mapInArrow fast path of extract_candidates.
-
-    mapInPandas materializes every span as a Python dict (pyarrow nested
-    struct -> pandas object column) — measured as a large share of worker CPU.
-    Here the ListArray<Struct> column is flattened ONCE per batch into four
-    primitive child arrays, and per-document slices are zipped directly:
-    same semantics, same output, ~no per-span object churn.
-    """
-    import pyarrow as pa
-
-    sc = documents.sparkSession.sparkContext
-    b_linker = sc.broadcast(
-        DeferredLinker(linkable_keys if linkable_keys is not None else set())
+    A missing ``res_target`` column defaults to ``doc_id`` and a missing
+    ``res_classes`` to ``[res_class]``."""
+    defaults = {"res_target": F.col("doc_id"), "res_classes": F.array("res_class")}
+    documents = documents.select(
+        *(F.col(c) if c in documents.columns else defaults[c].alias(c) for c in cols),
+        "spans",
     )
-
-    if "res_target" not in documents.columns:
-        documents = documents.withColumn("res_target", F.col("doc_id"))
-    if "res_classes" not in documents.columns:
-        documents = documents.withColumn("res_classes", F.array("res_class"))
-    documents = documents.select("doc_id", "lang", "res_classes", "res_target", "spans")
     if skew_repartition:
-        documents = documents.withColumn("n_spans", F.size("spans")).repartitionByRange(
-            "n_spans", "doc_id"
-        ).drop("n_spans")
-
-    out_schema = pa.schema(
-        [
-            ("doc_id", pa.string()),
-            ("subj", pa.string()),
-            ("pred", pa.string()),
-            ("obj", pa.string()),
-            ("obj_dt", pa.string()),
-            ("link_lang", pa.string()),
-            ("link_surface", pa.string()),
-            ("link_fallback", pa.string()),
-        ]
-    )
+        documents = documents.repartitionByRange(F.size("spans"), "doc_id")
+    b_linker = documents.sparkSession.sparkContext.broadcast(linker)
+    out_schema = to_arrow_schema(schema)
 
     def run(batches):
-        linker = b_linker.value
+        lk = b_linker.value
         for batch in batches:
-            cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-            doc_ids = cols["doc_id"].to_pylist()
-            langs = cols["lang"].to_pylist()
-            classes = cols["res_classes"].to_pylist()
-            targets = cols["res_target"].to_pylist()
-            spans_col = cols["spans"]
-            off = spans_col.offsets.to_pylist()
-            child = spans_col.values
-            kinds = child.field(0).to_pylist()
-            texts = child.field(1).to_pylist()
-            medias = child.field(2).to_pylist()
-            offs = child.field(3).to_pylist()
-            out = {k: [] for k in out_schema.names}
-            for r in range(batch.num_rows):
-                s, e = off[r], off[r + 1]
-                spans = list(zip(kinds[s:e], texts[s:e], medias[s:e], offs[s:e]))
-                triples, _ = extract_document(
-                    targets[r], list(classes[r]), langs[r], spans, linker
-                )
-                for subj, pred, obj, dt in triples:
-                    ll, ls, lf = _sentinel_parts(subj)
-                    out["doc_id"].append(doc_ids[r])
-                    out["subj"].append(subj)
-                    out["pred"].append(pred)
-                    out["obj"].append(obj)
-                    out["obj_dt"].append(dt)
-                    out["link_lang"].append(ll)
-                    out["link_surface"].append(ls)
-                    out["link_fallback"].append(lf)
-            yield pa.RecordBatch.from_pydict(out, schema=out_schema)
+            spans = batch.column("spans")
+            lengths = spans.value_lengths().fill_null(0).to_pylist()
+            flat = spans.flatten()
+            fields = [flat.field(f).to_pylist() for f in _SPAN_FIELDS]
+            rows, start = [], 0
+            for *row, n in zip(*(batch.column(c).to_pylist() for c in cols), lengths):
+                doc_spans = list(zip(*(f[start:start + n] for f in fields)))
+                rows.extend(emit(lk, *row, doc_spans))
+                start += n
+            columns = list(zip(*rows)) or [()] * len(out_schema)
+            yield pa.RecordBatch.from_pydict(
+                dict(zip(out_schema.names, columns)), schema=out_schema
+            )
 
-    return documents.mapInArrow(run, schema=CANDIDATES_SCHEMA)
+    return documents.mapInArrow(run, schema=schema)
+
+
+def _candidates(linker, doc_id, lang, res_classes, res_target, spans):
+    triples, _ = extract_document(res_target, res_classes, lang, spans, linker)
+    return [(doc_id, s, p, o, dt, *_sentinel_parts(s)) for s, p, o, dt in triples]
+
+
+def _metrics(linker, doc_id, lang, res_classes, spans):
+    triples, stats = extract_document(doc_id, res_classes, lang, spans, linker)
+    return [(doc_id, *stats, len(triples))]
+
+
+def _items(_linker, doc_id, lang, res_class, spans):
+    rows = []
+    for section_path, items in parse_spans(spans, lang).items():
+        for idx, item in enumerate(items):
+            nested = isinstance(item, list)
+            rows.extend(
+                (doc_id, lang, res_class, section_path, idx, 2 if nested else 1, text)
+                for text in (item if nested else [item])
+            )
+    return rows
+
+
+def extract_candidates(
+    documents: DataFrame, linkable_keys=None, skew_repartition: bool = False
+) -> DataFrame:
+    """documents(doc_id, lang, res_class, spans[, res_target, res_classes])
+    -> candidates (CANDIDATES_SCHEMA).
+
+    ``linkable_keys``: broadcastable set of (lang, surface) mention keys; link
+    resolution is deferred to the join stage via sentinels.
+    ``res_target``: optional redirect-resolved page id (defaults to doc_id).
+    ``res_classes``: optional class list overriding ``[res_class]``.
+    """
+    linker = DeferredLinker(linkable_keys if linkable_keys is not None else set())
+    return _map_documents(
+        documents, ("doc_id", "lang", "res_classes", "res_target"),
+        CANDIDATES_SCHEMA, _candidates, linker, skew_repartition,
+    )
+
+
+# the benchmark (perfbench/) imports the kernel under this name as well
+extract_candidates_arrow = extract_candidates
 
 
 def parse_items(documents: DataFrame) -> DataFrame:
@@ -210,58 +147,16 @@ def parse_items(documents: DataFrame) -> DataFrame:
     Used for the per-row parse-invariant check and as the resumability
     boundary mirroring the reference's resDict debug dump (utilities.py:101-153).
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in ITEMS_SCHEMA.fields}
-            for doc_id, lang, res_class, spans in zip(
-                pdf["doc_id"], pdf["lang"], pdf["res_class"], pdf["spans"]
-            ):
-                res_dict = parse_spans(_spans_from_cell(spans), lang)
-                for section_path, items in res_dict.items():
-                    for idx, item in enumerate(items):
-                        nested = isinstance(item, list)
-                        texts = item if nested else [item]
-                        for t in texts:
-                            rows["doc_id"].append(doc_id)
-                            rows["lang"].append(lang)
-                            rows["res_class"].append(res_class)
-                            rows["section_path"].append(section_path)
-                            rows["item_idx"].append(idx)
-                            rows["depth"].append(2 if nested else 1)
-                            rows["item_text"].append(t)
-            yield pd.DataFrame(rows)
-
-    return documents.mapInPandas(run, schema=ITEMS_SCHEMA)
+    return _map_documents(documents, ("doc_id", "lang", "res_class"), ITEMS_SCHEMA, _items)
 
 
 def extract_metrics(documents: DataFrame, linkable_keys=None) -> DataFrame:
     """Per-document extraction stats (the reference's evaluate() numbers,
-    utilities.py:319-346), computed in the same narrow pass shape.  Honors a
-    ``res_classes`` override column the same way extract_candidates does (so
-    a -c classname override counts what the pipeline actually extracts)."""
-    sc = documents.sparkSession.sparkContext
-    b_linker = sc.broadcast(
-        DeferredLinker(linkable_keys if linkable_keys is not None else set())
+    utilities.py:319-346), computed by the same kernel.  The resource is
+    ``doc_id`` (not ``res_target``), and a ``res_classes`` override column is
+    honoured the same way extract_candidates does (so a -c classname
+    override counts what the pipeline actually extracts)."""
+    linker = DeferredLinker(linkable_keys if linkable_keys is not None else set())
+    return _map_documents(
+        documents, ("doc_id", "lang", "res_classes"), METRICS_SCHEMA, _metrics, linker
     )
-    if "res_classes" not in documents.columns:
-        documents = documents.withColumn("res_classes", F.array("res_class"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        linker = b_linker.value
-        for pdf in batches:
-            rows = {k.name: [] for k in METRICS_SCHEMA.fields}
-            for doc_id, lang, res_class, spans in zip(
-                pdf["doc_id"], pdf["lang"], pdf["res_classes"], pdf["spans"]
-            ):
-                triples, (n_sections, n_items, n_extracted) = extract_document(
-                    doc_id, list(res_class), lang, _spans_from_cell(spans), linker
-                )
-                rows["doc_id"].append(doc_id)
-                rows["n_sections"].append(n_sections)
-                rows["n_items"].append(n_items)
-                rows["n_extracted"].append(n_extracted)
-                rows["n_triples"].append(len(triples))
-            yield pd.DataFrame(rows)
-
-    return documents.mapInPandas(run, schema=METRICS_SCHEMA)

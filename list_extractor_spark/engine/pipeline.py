@@ -1,6 +1,6 @@
 """End-to-end KG-construction pipeline with checkpointed, resumable stages.
 
-    documents ──①redirect join──②extract (narrow mapInPandas)──③link join──
+    documents ──①redirect join──②extract (narrow mapInArrow)──③link join──
     ──④canonicalize──⑤dedup + materialize (partitioned parquet + lineage)
 
 Stage outputs land under ``run_dir/<stage>/`` as parquet with Spark's
@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .bloom import build_bloom
 from .canonicalize import apply_canonical_df, canonical_map_df, identity_edges
-from .extract import extract_candidates_arrow
+from .extract import extract_candidates
 from .linking import attach_page_types, resolve_links, resolve_redirects
 from .schemas import (
     MENTION_INDEX_SCHEMA,
@@ -140,7 +140,7 @@ class Pipeline:
             if page_types is not None:
                 docs = attach_page_types(docs, page_types)
             candidates = self._checkpoint(
-                extract_candidates_arrow(
+                extract_candidates(
                     docs, linkable_keys=linkable_keys,
                     skew_repartition=self.skew_repartition,
                 ),

@@ -4,14 +4,15 @@ The reference is strictly batch (one serial run per class,
 listExtractor.py:104-146).  A production corpus arrives continuously, so the
 engine also exposes the extract stage as a Structured Streaming flow:
 
-    readStream(parquet span docs) -> mapInPandas extract (same core) ->
+    readStream(parquet span docs) -> mapInArrow extract (same kernel) ->
     broadcast link join -> append sink
 
 The extract stage is stateless per document, so it streams unchanged — the
-same narrow mapInPandas plan, incrementally executed per micro-batch.  The
-dedup/canonicalize stages are batch post-passes over the sink (set semantics
-need global state); watermarked windowed aggregation is demonstrated on the
-events stream for the late-data pattern.
+batch pipeline's own mapInArrow kernel (engine/extract.py), incrementally
+executed per micro-batch.  The dedup/canonicalize stages are batch
+post-passes over the sink (set semantics need global state); watermarked
+windowed aggregation is demonstrated on the events stream for the late-data
+pattern.
 """
 
 from __future__ import annotations

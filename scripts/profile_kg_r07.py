@@ -15,7 +15,7 @@ from list_extractor_spark.engine.canonicalize import (  # noqa: E402
     canonical_map_df,
     identity_edges,
 )
-from list_extractor_spark.engine.extract import extract_candidates_arrow  # noqa: E402
+from list_extractor_spark.engine.extract import extract_candidates  # noqa: E402
 from list_extractor_spark.engine.linking import resolve_links, resolve_redirects  # noqa: E402
 from list_extractor_spark.engine.pipeline import Pipeline, snapshots_to_dfs  # noqa: E402
 from list_extractor_spark.engine.schemas import DOCUMENTS_SCHEMA  # noqa: E402
@@ -50,7 +50,7 @@ out = {}
 t("bloom_build", lambda: build_bloom(mention_index.select("lang", "surface")), out)
 bloom = build_bloom(mention_index.select("lang", "surface"))
 docs_r = resolve_redirects(df, redirects)
-cand = extract_candidates_arrow(docs_r, linkable_keys=bloom)
+cand = extract_candidates(docs_r, linkable_keys=bloom)
 t("scan_only", lambda: noop(df), out)
 t("extract_noop", lambda: noop(cand), out)
 linked = resolve_links(cand, mention_index, sameas)

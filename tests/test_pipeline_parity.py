@@ -4,6 +4,7 @@ per-row parse invariant, parallelism invariance, canonicalization agreement
 and kill-and-resume reproducibility."""
 
 import shutil
+from collections import Counter
 
 import pytest
 
@@ -243,19 +244,124 @@ def test_resume_reproduces_identical_triples(spark, corpus, snapshots, documents
     assert any(s["stage"] == "candidates" and s["reused"] for s in pipe.lineage)
 
 
-def test_arrow_extract_matches_pandas_extract(spark, documents_df, snapshots):
-    from list_extractor_spark.engine.extract import (
-        extract_candidates,
-        extract_candidates_arrow,
-    )
+def _hostile_docs(case):
+    """Span documents for one hostile-input case, as row dicts (``spans`` may
+    be None; ``res_classes`` / ``res_target`` only where the case sets them)."""
+    names = ("doc_id", "lang", "res_class", "spans")
+    docs = [dict(zip(names, row)) for row in corpus_to_rows(make_corpus(14, hub_every=0))]
+    if case == "zero_rows":
+        return []
+    if case == "null_spans":
+        docs[0]["spans"] = None
+        docs[7]["spans"] = None
+        docs.append({"doc_id": "Null_end", "lang": "en", "res_class": "Writer", "spans": None})
+    elif case == "empty_spans":
+        docs[0]["spans"] = []
+        docs[7]["spans"] = []
+    elif case == "unicode":
+        spans = [
+            ("section:0", "Bibliography \U0001D11E", "", 0),
+            ("section:1", "Nove\u0301ls", "", 1),
+            ("list_item:1", "''Cafe\u0301 \U0001D4B3 \U0001F600'' (1999)", "", 2),
+            ("list_item:1", "''\u0928\u093F \U00020BB7'' (2001) {{Ref \U0001F600}}", "", 3),
+            ("section:0", "Awards", "", 4),
+            ("list_item:1", "Won {{Ref \u00e9\u0301}} for ''Zoe\u0308'' 1990", "", 5),
+            ("section:0", "Fami\u0301ly \U0001F46A", "", 6),
+            ("list_item:1", "A\u030a\U0001D400 B\u0327, spouse", "", 7),
+        ]
+        docs.insert(3, {"doc_id": "Writer_\U0001F600\u0301", "lang": "en",
+                        "res_class": "Writer", "spans": spans})
+    elif case == "hub":
+        spans = [("section:0", "Career", "", 0)] + [
+            ("list_item:1", f"Expedition {j} leader", "", j + 1) for j in range(20000)
+        ]
+        docs.insert(5, {"doc_id": "Hub_big", "lang": "en", "res_class": "Person",
+                        "spans": spans})
+    elif case == "res_classes":
+        for i, d in enumerate(docs):
+            d["res_classes"] = [d["res_class"], "Person"] if i % 2 else ["Person"]
+    elif case == "res_target":
+        for i, d in enumerate(docs):
+            d["res_target"] = f"Target_{d['doc_id']}" if i % 3 else d["doc_id"]
+    return docs
+
+
+def _hostile_df(spark, docs):
+    from pyspark.sql import types as T
+
+    fields = [
+        T.StructField(f.name, f.dataType, f.name == "spans") for f in DOCUMENTS_SCHEMA.fields
+    ]
+    if docs and "res_classes" in docs[0]:
+        fields.append(T.StructField("res_classes", T.ArrayType(T.StringType()), False))
+    if docs and "res_target" in docs[0]:
+        fields.append(T.StructField("res_target", T.StringType(), False))
+    schema = T.StructType(fields)
+    rows = [tuple(d[f.name] for f in schema.fields) for d in docs]
+    # one partition, so the 2-row Arrow batches walk later batches' offsets
+    return spark.createDataFrame(rows, schema=schema).coalesce(1)
+
+
+def _core_outputs(docs, keys):
+    """Plain Python loop over the core functions: the single semantic source
+    the Spark kernel must reproduce."""
+    from list_extractor_spark.core.links import DeferredLinker
+    from list_extractor_spark.core.mappers import extract_document
+    from list_extractor_spark.engine.extract import _sentinel_parts
+
+    linker = DeferredLinker(keys)
+    cands, metrics, items = [], [], []
+    for d in docs:
+        doc_id, lang = d["doc_id"], d["lang"]
+        spans = d["spans"] or []
+        classes = d.get("res_classes", [d["res_class"]])
+        triples, _ = extract_document(d.get("res_target", doc_id), classes, lang, spans, linker)
+        cands += [(doc_id, s, p, o, dt, *_sentinel_parts(s)) for s, p, o, dt in triples]
+        triples, stats = extract_document(doc_id, classes, lang, spans, linker)
+        metrics.append((doc_id, *stats, len(triples)))
+        for sect, its in parse_spans(spans, lang).items():
+            for idx, it in enumerate(its):
+                for t in (it if isinstance(it, list) else [it]):
+                    depth = 2 if isinstance(it, list) else 1
+                    items.append((doc_id, lang, d["res_class"], sect, idx, depth, t))
+    return Counter(cands), Counter(metrics), Counter(items)
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["null_spans", "empty_spans", "zero_rows", "unicode", "hub", "res_classes", "res_target"],
+)
+def test_extract_kernel_matches_core_on_hostile_input(spark, snapshots, case):
+    """Candidates, metrics and parse items from the one Arrow kernel equal the
+    core functions on hostile input, read in 2-row Arrow batches.  A NULL or
+    empty ``spans`` is an empty document: no candidates or items, and a
+    metrics row of zeros."""
+    from list_extractor_spark.engine.extract import extract_candidates, extract_metrics
 
     keys = {(lang, s) for (lang, s, w, r) in snapshots["mention_index"]}
-    cols = ["doc_id", "subj", "pred", "obj", "obj_dt", "link_lang", "link_surface"]
-    a = sorted(tuple(r) for r in extract_candidates(documents_df, linkable_keys=keys)
-               .select(cols).collect())
-    b = sorted(tuple(r) for r in extract_candidates_arrow(documents_df, linkable_keys=keys)
-               .select(cols).collect())
-    assert a == b
+    keys.add(("en", "{{Ref \U0001F600}}"))
+    docs = _hostile_docs(case)
+    df = _hostile_df(spark, docs)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        got = [
+            Counter(tuple(r) for r in out.collect())
+            for out in (
+                extract_candidates(df, linkable_keys=keys),
+                extract_metrics(df, linkable_keys=keys),
+                parse_items(df),
+            )
+        ]
+    finally:
+        spark.conf.set(conf, old)
+    want = _core_outputs(docs, keys)
+    for name, g, w in zip(("candidates", "metrics", "items"), got, want):
+        assert g == w, (name, list((g - w).items())[:3], list((w - g).items())[:3])
+    blank = [d["doc_id"] for d in docs if not d["spans"]]
+    assert bool(blank) == (case in ("null_spans", "empty_spans"))
+    assert all(got[1][(doc_id, 0, 0, 0, 0)] == 1 for doc_id in blank)
 
 
 def test_build_edges_duplicate_sources_min_wins():

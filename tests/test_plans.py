@@ -20,7 +20,7 @@ def test_extract_stage_is_narrow(spark):
         corpus_to_rows(make_corpus(6, hub_every=0)), schema=DOCUMENTS_SCHEMA
     )
     plan = _plan(extract_candidates(docs, linkable_keys=set()))
-    assert "Exchange" not in plan, plan  # zero shuffle: scan -> mapInPandas
+    assert "Exchange" not in plan, plan  # zero shuffle: scan -> mapInArrow
 
 
 def test_link_join_is_broadcast(spark):
