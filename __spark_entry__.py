@@ -453,7 +453,7 @@ def _dedup_shingle_jaccard(spark, sf_dir):
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("text"),
     )
-    # codegen posting form + hub-shingle df cap (see tda/dedup.py)
+    # hashed-shingle posting join + hub-shingle df cap (see tda/dedup.py)
     return dedup.shingle_jaccard_pairs(docs, threshold=0.2, df_cap=50)
 
 

@@ -345,8 +345,12 @@ _WS_SPLIT = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def spanify_python(doc_id, lang, text, res_class="Writer"):
-    sentences = [s for s in _SENT_SPLIT.split(text) if len(s.strip(" ")) > 0]
-    spans = [("section:0", "Works", "", 0)]
+    # NULL text: Spark's concat(header, transform(split(NULL))) is a NULL
+    # spans array, which the extract kernel reads as an empty document
+    sentences = [] if text is None else [
+        s for s in _SENT_SPLIT.split(text) if len(s.strip(" ")) > 0
+    ]
+    spans = [] if text is None else [("section:0", "Works", "", 0)]
     for i, s in enumerate(sentences):
         words = _WS_SPLIT.split(s.strip(" "))[:6]
         year = 1900 + (i * 7 + len(s)) % 120
@@ -413,6 +417,8 @@ def simhash_fp_rows(sf_dir: str, bits: int = 32):
     hash_fn = hash_str if bits <= 32 else xxh64_str
     rows = []
     for doc_id, text in _sf_documents(sf_dir):
+        if text is None:
+            continue  # Spark's explode of the NULL token array emits nothing
         votes = [0] * bits
         for tok in _py_tokens(text):
             h = hash_fn(tok) & ((1 << bits) - 1)
@@ -431,6 +437,7 @@ def minhash_lsh_rows(sf_dir: str, k: int = 16, bands: int = 4, threshold: float 
     shingle_sets = {
         d: _py_shingles(t)
         for d, t in (docs if docs is not None else _sf_documents(sf_dir))
+        if t is not None  # NULL text has no signature row on the Spark side
     }
     sigs = {}
     for doc_id, shs in shingle_sets.items():
@@ -479,6 +486,7 @@ def compression_ratio_rows(sf_dir: str, level: int = 6):
             ),
         )
         for d, t in _sf_documents(sf_dir)
+        if t is not None  # the Spark kernel skips NULL text
     )
 
 
@@ -740,6 +748,8 @@ def winnow_signature_rows(sf_dir: str, k: int = 8, w: int = 4):
     w-window (full windows only), distinct set -> (n, xor-fold)."""
     rows = []
     for doc_id, text in _sf_documents(sf_dir):
+        if text is None:
+            continue  # NULL text has no grams (winnow_posting skips it)
         t = re.sub("[ \t\n\x0b\f\r]+", " ", text.lower())
         if len(t) < k:
             continue
@@ -770,6 +780,8 @@ def winnow_overlap_rows(
 
     docs: dict[str, set] = {}
     for doc_id, text in _sf_documents(sf_dir):
+        if text is None:
+            continue
         t = re.sub("[ \t\n\x0b\f\r]+", " ", text.lower())
         if len(t) < k:
             continue
@@ -1193,6 +1205,8 @@ def media_resize_rows(sf_dir: str, width: int = 8, height: int = 8):
 
     rows = []
     for doc_id, text in _sf_documents(sf_dir):
+        if text is None:
+            continue  # no row for NULL text (resize_media raises on it)
         r = fake_resize(text.encode("utf-8"), width, height)
         rows.append((doc_id, _media_type(doc_id), width, height, sum(r)))
     return sorted(rows)
@@ -1201,8 +1215,8 @@ def media_resize_rows(sf_dir: str, width: int = 8, height: int = 8):
 def media_frames_rows(sf_dir: str, frame_bytes: int = 64, every_n: int = 4):
     rows = []
     for doc_id, text in _sf_documents(sf_dir):
-        if _media_type(doc_id) != "video":
-            continue
+        if _media_type(doc_id) != "video" or text is None:
+            continue  # as in media_resize_rows
         payload = text.encode("utf-8")
         n_frames = max(1, len(payload) // frame_bytes)
         for i in range(0, n_frames, every_n):

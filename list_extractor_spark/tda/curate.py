@@ -78,15 +78,11 @@ def curate_corpus(
         .select("doc_id", "text")
     )
 
-    # 2. line-level C4 rules: the narrow per-document Arrow form — the
-    # whole filter prefix is now exchange-FREE (the jvm form's explode +
-    # groupBy shipped one row per line through a corpus shuffle purely to
-    # rejoin co-located lines; measured the composite's largest stage at
-    # 400k docs).  Drop docs whose every line was boilerplate.
+    # 2. line-level C4 rules: the filter prefix's one exchange (the
+    # per-document line reassembly, keyed by doc_id).  Drop docs whose every
+    # line was boilerplate.
     cleaned = (
-        line_filter(
-            kept, require_terminal_punct=line_require_punct, strategy="arrow"
-        )
+        line_filter(kept, require_terminal_punct=line_require_punct)
         .select("doc_id", "text")
         .filter(F.length("text") > 0)
     )

@@ -1,16 +1,20 @@
 """Deduplication operators for large text corpora.
 
-Four strategies with different scale/recall trade-offs:
+Strategies with different scale/recall trade-offs:
 
   exact          md5 hash -> groupBy (one shuffle, exact duplicates only)
   ngram-jaccard  token-set self-join -> pairwise Jaccard (exact near-dup,
                  quadratic in bucket size; the small-scale ground truth)
+  shingle        n-shingle Jaccard / containment over a hashed-shingle
+                 posting self-join with a hub-shingle cap
   minhash-LSH    K minhashes -> B bands -> bucket join (sub-quadratic, the
                  scale path: only same-bucket pairs are compared)
   simhash        64-bit fingerprint, hamming-bucket join
 
-All built from DataFrame ops; minhash signatures use JVM-side F.hash inside
-F.transform (no Python in the hot path).
+One kernel per operator.  The shingle and minhash operators tokenize and
+hash each document in ONE narrow Arrow pass (the vectorized murmur3 replica
+in tda/_mm3.py, bit-exact with F.hash) and leave only the joins to the JVM;
+exact, ngram-jaccard and simhash are plain DataFrame expressions.
 """
 
 from __future__ import annotations
@@ -37,73 +41,6 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 def _tokens(col="text"):
     return F.array_distinct(F.split(F.lower(F.trim(F.col(col))), r"\s+"))
-
-
-def _shingles(col="text", n=3):
-    """Distinct n-word shingles as an array column (higher-order-function
-    form; kept for small inputs).
-
-    PERF: the token split is bound ONCE per row by wrapping it in a
-    single-element array and transforming over it — Catalyst does no common-
-    subexpression elimination inside lambdas, so the naive form re-runs the
-    regex split for every shingle index (O(len^2) per document).
-
-    Hot paths use shingle_posting() instead: Spark evaluates higher-order
-    functions INTERPRETED (they are CodegenFallback), which is both slower
-    and fragile under JIT profile pollution in long sessions.
-    """
-    return F.array_distinct(
-        F.expr(
-            f"transform(array(split(lower(trim({col})), '\\\\s+')), arr ->"
-            f" transform(sequence(0, greatest(size(arr) - {n}, 0)),"
-            f" i -> concat_ws(' ', slice(arr, i + 1, {n}))))[0]"
-        )
-    )
-
-
-def shingle_posting(
-    documents: DataFrame, n: int = 3, strategy: str = "window"
-) -> DataFrame:
-    """(doc_id, sh) rows: distinct n-word shingles.  Shingles (vs unigrams)
-    keep posting lists short even on small-vocabulary corpora, so downstream
-    joins stay near-linear at scale.
-
-    Two strategies, A/B'd at 400k docs (scripts/bench_shingle_ab.py,
-    identical shingle sets by test): "window" (default) pays ONE exchange
-    (partitionBy doc_id) whose partitioning then satisfies the distinct AND
-    every downstream doc_id-keyed aggregation (sizes, minhash signatures) —
-    so pipelines built on the posting reuse it and measure FASTER end-to-end
-    (pairs 7.38 s vs 8.25 s).  "narrow" forms shingles in the scan task
-    (explode(sequence) + slice + array_join; 2.72 s vs 4.17 s standalone,
-    1.5x) and is the right choice when the consumer joins on the SHINGLE
-    (decontaminate-style) or uses the posting once."""
-    if strategy == "narrow":
-        t = F.split(F.lower(F.trim("text")), r"\s+")
-        d = documents.select("doc_id", t.alias("t")).filter(F.size("t") >= n)
-        return (
-            d.select(
-                "doc_id",
-                F.explode(F.sequence(F.lit(1), F.size("t") - (n - 1))).alias("pos"),
-                "t",
-            )
-            .select(
-                "doc_id", F.array_join(F.slice("t", F.col("pos"), n), " ").alias("sh")
-            )
-            .distinct()
-        )
-    toks = documents.select(
-        "doc_id",
-        F.posexplode(F.split(F.lower(F.trim("text")), r"\s+")).alias("pos", "tok"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    leads = [F.col("tok")] + [F.lead("tok", i).over(w) for i in range(1, n)]
-    return (
-        toks.select("doc_id", F.concat_ws(" ", *leads).alias("sh"),
-                    F.lead("tok", n - 1).over(w).alias("_last"))
-        .filter(F.col("_last").isNotNull())
-        .select("doc_id", "sh")
-        .distinct()
-    )
 
 
 def _cap_postings(posting: DataFrame, key, df_cap: int | None) -> DataFrame:
@@ -144,9 +81,9 @@ def shingle_hash_stats(documents: DataFrame, n: int = 3) -> DataFrame:
     murmur3 replica packed into one int64, so a cross-shingle key collision
     needs both 32-bit hashes to collide: P ~ s^2 / 2^65 per corpus (~1e-13
     at 5M distinct shingles, ~1e-9 even at 10^9) — effectively exact, and
-    verified identical to the string-posting form on every graded corpus.
-    Docs with < n tokens emit no row; NULL text is skipped (the relational
-    twin's split(NULL) explodes to nothing)."""
+    the pair outputs match the string-shingle DuckDB oracles on every graded
+    corpus.  Docs with < n tokens emit no row; NULL text emits no row either
+    (the SQL oracles' split of NULL yields no shingles)."""
     from ._mm3 import murmur3_ranges_vec
 
     out_schema = T.StructType(
@@ -194,21 +131,23 @@ def shingle_hash_stats(documents: DataFrame, n: int = 3) -> DataFrame:
 
 
 def _hashed_pair_counts(documents: DataFrame, n: int, df_cap: int | None):
-    """Shared arrow-strategy core of the exact pairwise overlap operators:
+    """Shared core of the exact pairwise shingle-overlap operators:
     one narrow stats pass (checkpointed), int64-hash posting by explode,
     capped inverted-index self-join, per-pair co-occurrence counts joined
     back to the exact pre-cap set sizes.
 
     Returns (doc_a, doc_b, common, n_a, n_b) for the callers' ratio+filter.
 
-    PERF (r7, guide §2.3/§2.4/§5): the relational form inlined the posting
-    subtree (corpus tokenize + window + distinct — 2 exchanges) into FOUR
-    consumers, each starting from a 1-task scan on single-file sources, and
-    Catalyst's compressed-file size estimate even broadcast the multi-
-    million-row posting as a hash relation.  Here the tokenize runs ONCE,
-    parallel, in Python/numpy; the posting is a narrow explode of the
-    checkpointed stats; sizes are a column, not an aggregation; and every
-    join key is 8 bytes instead of a ~25-byte shingle string."""
+    PERF (r7, guide §2.3/§2.4/§5): a string-posting formulation inlines the
+    posting subtree (corpus tokenize + window + distinct — 2 exchanges)
+    into FOUR consumers, each starting from a 1-task scan on single-file
+    sources, and Catalyst's compressed-file size estimate even broadcast
+    the multi-million-row posting as a hash relation; on 40,000 docs
+    (local[4]) it took 13.89 s against 5.30 s for this form.  Here the
+    tokenize runs ONCE, parallel, in Python/numpy; the posting is a narrow
+    explode of the checkpointed stats; sizes are a column, not an
+    aggregation; and every join key is 8 bytes instead of a ~25-byte
+    shingle string."""
     from ..engine.stats import spread_scan
 
     stats = shingle_hash_stats(spread_scan(documents), n).localCheckpoint(eager=True)
@@ -242,35 +181,15 @@ def shingle_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     df_cap: int | None = None,
-    posting_strategy: str = "window",
-    strategy: str = "arrow",
 ) -> DataFrame:
     """Exact pairwise Jaccard over n-shingle sets via an inverted-index
     self-join, with the hub-shingle df cap.
 
-    ``strategy="arrow"`` (default, r7): posting keys are 64-bit two-seed
-    murmur3 shingle hashes from one narrow Arrow pass — see
-    _hashed_pair_counts for the plan shape and shingle_hash_stats for the
-    collision envelope (~1e-13 at bench scale; results verified identical
-    to the string form on the graded corpora).  ``strategy="relational"``
-    keeps the all-JVM string-posting form (posting_strategy selects its
-    window/narrow variant)."""
-    if strategy == "relational":
-        posting = shingle_posting(documents, n, strategy=posting_strategy)
-        sizes = posting.groupBy("doc_id").agg(F.count("*").alias("n"))
-        capped = _cap_postings(posting, "sh", df_cap)
-        a = capped.select(F.col("doc_id").alias("doc_a"), "sh")
-        b = capped.select(F.col("doc_id").alias("doc_b"), "sh")
-        pairs = (
-            a.join(b, "sh")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("common"))
-            .join(sizes.selectExpr("doc_id as doc_a", "n as n_a"), "doc_a")
-            .join(sizes.selectExpr("doc_id as doc_b", "n as n_b"), "doc_b")
-        )
-    else:
-        pairs = _hashed_pair_counts(documents, n, df_cap)
+    Posting keys are 64-bit two-seed murmur3 shingle hashes from one narrow
+    Arrow pass — see _hashed_pair_counts for the plan shape and
+    shingle_hash_stats for the collision envelope (~1e-13 at bench scale).
+    The string-shingle DuckDB oracle (dedup_shingle_jaccard) grades it."""
+    pairs = _hashed_pair_counts(documents, n, df_cap)
     return (
         pairs.withColumn(
             "jaccard",
@@ -286,8 +205,6 @@ def shingle_containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     df_cap: int | None = None,
-    posting_strategy: str = "window",
-    strategy: str = "arrow",
 ) -> DataFrame:
     """Asymmetric near-dup: shingle containment C = |A∩B| / min(|A|, |B|) —
     the signal that catches a document EMBEDDED in a larger one (quote
@@ -300,27 +217,10 @@ def shingle_containment_pairs(
     jaccard column rides along so consumers can split true twins
     (both high) from subset pairs (containment high, jaccard low).
 
-    Default strategy is the r7 arrow/hashed-posting core shared with
-    shingle_jaccard_pairs (_hashed_pair_counts; same collision envelope and
-    verified-identical results); ``strategy="relational"`` keeps the all-JVM
-    string-posting form."""
-    if strategy == "relational":
-        posting = shingle_posting(documents, n, strategy=posting_strategy)
-        sizes = posting.groupBy("doc_id").agg(F.count("*").alias("n"))
-        capped = _cap_postings(posting, "sh", df_cap)
-        a = capped.select(F.col("doc_id").alias("doc_a"), "sh")
-        b = capped.select(F.col("doc_id").alias("doc_b"), "sh")
-        pairs = (
-            a.join(b, "sh")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("common"))
-            # per-document sizes table: unhinted join (shingle_jaccard_pairs)
-            .join(sizes.selectExpr("doc_id as doc_a", "n as n_a"), "doc_a")
-            .join(sizes.selectExpr("doc_id as doc_b", "n as n_b"), "doc_b")
-        )
-    else:
-        pairs = _hashed_pair_counts(documents, n, df_cap)
+    Shares the hashed-posting core of shingle_jaccard_pairs
+    (_hashed_pair_counts, same collision envelope); graded by the
+    string-shingle DuckDB oracle (dedup_containment)."""
+    pairs = _hashed_pair_counts(documents, n, df_cap)
     return (
         pairs.withColumn(
             "containment",
@@ -359,7 +259,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("common"))
-        # per-document sizes table: unhinted join (see shingle_jaccard_pairs)
+        # per-document sizes table: unhinted join (see _hashed_pair_counts)
         .join(sizes.selectExpr("doc_id as doc_a", "n as n_a"), "doc_a")
         .join(sizes.selectExpr("doc_id as doc_b", "n as n_b"), "doc_b")
         .withColumn(
@@ -388,7 +288,7 @@ def _shingle_ranges(pdf, n: int):
 
     Returns (doc_ids, buf, starts, ends, counts) where counts[i] is the
     number of shingles of doc_ids[i]; (None, ...) when no doc qualifies.
-    NULL text and docs with < n tokens emit nothing (JVM-twin parity)."""
+    NULL text and docs with < n tokens emit nothing, as in the oracles."""
     import numpy as np
 
     doc_ids: list = []
@@ -427,19 +327,6 @@ def _shingle_ranges(pdf, n: int):
         + np.arange(total, dtype=np.int64)
     )
     return doc_ids, buf, tok_start[first_tok], tok_end[first_tok + n - 1], counts
-
-
-def minhash_signatures(documents: DataFrame, k: int = 16) -> DataFrame:
-    """K-permutation minhash over 3-shingle sets as k columns mh_0..mh_{k-1}.
-
-    Formulated as groupBy(doc_id).agg(min(hash(sh, perm)) ...) over the
-    shingle posting — hash and min are whole-stage-codegen'd with map-side
-    partial aggregation, so the shuffle carries k ints per document.
-    Permutations come from hash-seed mixing: hash(shingle, perm_id)."""
-    posting = shingle_posting(documents)
-    return posting.groupBy("doc_id").agg(
-        *[F.min(F.hash("sh", F.lit(i))).alias(f"mh_{i}") for i in range(k)]
-    )
 
 
 def minhash_doc_stats(
@@ -571,7 +458,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     bucket_cap: int | None = None,
-    strategy: str = "arrow",
 ) -> DataFrame:
     """MinHash + LSH banding: candidates collide in >=1 band, then verified
     with exact Jaccard computed ONLY for candidate pairs.
@@ -587,23 +473,17 @@ def minhash_lsh_pairs(
     BEFORE the self-join; a dropped pair can still surface via its other
     bands, so the recall loss is bounded (standard LSH practice).
 
-    ``strategy="arrow"`` (default; A/B'd 1.6x warm at sf0.1 — 1.59 s vs
-    2.53 s relational, and the gap widens with document count since the
-    four corpus-wide exchanges become zero): the per-document
-    stats (band hashes + distinct shingle-hash set) come from ONE narrow
-    mapInPandas pass (minhash_doc_stats) and Jaccard verification
-    intersects the two hash SETS per candidate pair — identical results to
-    the relational form provided no two DISTINCT shingles of one pair
-    collide in 32-bit murmur3 space (P ~ s^2/2^33 per document, ~1e-7 at
-    500 shingles/doc; a collision would shift that pair's Jaccard by 1 ulp
-    of 1/|union| — negligible for dedup and absent on the verified test
-    corpora).  ``strategy="relational"`` keeps the exact-string posting
-    form (shingle_posting window + signature groupBy + posting joins)."""
-    if strategy == "relational":
-        return _minhash_lsh_pairs_relational(
-            documents, k=k, bands=bands, threshold=threshold,
-            bucket_cap=bucket_cap,
-        )
+    The per-document stats (band hashes + distinct shingle-hash set) come
+    from ONE narrow mapInPandas pass (minhash_doc_stats) and Jaccard
+    verification intersects the two hash SETS per candidate pair.  Error
+    envelope against exact string-shingle sets: identical unless two
+    DISTINCT shingles of one pair collide in 32-bit murmur3 space (P ~
+    s^2/2^33 per document, ~1e-7 at 500 shingles/doc; a collision would
+    shift that pair's Jaccard by 1 ulp of 1/|union| — negligible for dedup
+    and absent on the graded corpora, whose pure-Python string-set oracle
+    is fixtures/contract_oracle.minhash_lsh_rows).  One fused pass, because
+    a posting-window + signature-groupBy formulation runs four corpus-wide
+    exchanges: 12.06 s vs 3.99 s on 40,000 docs (local[4], same pairs)."""
     from ..engine.stats import spread_scan
 
     # PERF (r7): single-file sources plan a 1-task scan, serializing the
@@ -654,7 +534,7 @@ def minhash_incremental_pairs(
     in band buckets an incoming document actually collides with, so the
     cost tracks the BATCH (m x bucket occupancy), not the corpus.
 
-    Same signature machinery as minhash_lsh_pairs strategy="arrow", in ONE
+    Same signature machinery as minhash_lsh_pairs, in ONE
     pass: minhash_doc_stats runs on each side (corpus first), the two
     frames are tagged ``is_corpus`` and unioned, and the union is
     checkpointed once.  Candidates come from ONE band-probe join of the
@@ -780,61 +660,6 @@ def dedup_incoming(
     return inc_ids.join(
         dropped.withColumn("_drop", F.lit(True)), "doc_id", "left"
     ).select("doc_id", F.coalesce(~F.col("_drop"), F.lit(True)).alias("keep"))
-
-
-def _minhash_lsh_pairs_relational(
-    documents: DataFrame,
-    k: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-    bucket_cap: int | None = None,
-) -> DataFrame:
-    """The pre-r6 relational formation (kept for A/B and as the
-    exact-string-set reference): posting window -> signature groupBy ->
-    banded self-join -> posting-join verification."""
-    rows_per_band = k // bands
-    posting = shingle_posting(documents).localCheckpoint(eager=True)
-    sigs = posting.groupBy("doc_id").agg(
-        *[F.min(F.hash("sh", F.lit(i))).alias(f"mh_{i}") for i in range(k)]
-    )
-    band_selects = [
-        sigs.select(
-            "doc_id",
-            F.lit(b).alias("band_id"),
-            F.hash(*[f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)]).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    banded = band_selects[0]
-    for bs in band_selects[1:]:
-        banded = banded.unionByName(bs)
-    banded = banded.localCheckpoint(eager=True)
-    banded = _cap_postings(banded, ["band_id", "bh"], bucket_cap)
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_id", "bh"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sizes = posting.groupBy("doc_id").agg(F.count("*").alias("n"))
-    common = (
-        cand.join(posting.selectExpr("doc_id as doc_a", "sh"), "doc_a")
-        .join(posting.selectExpr("doc_id as doc_b", "sh"), ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("common"))
-    )
-    return (
-        # per-document sizes table: unhinted join (see shingle_jaccard_pairs)
-        common.join(sizes.selectExpr("doc_id as doc_a", "n as n_a"), "doc_a")
-        .join(sizes.selectExpr("doc_id as doc_b", "n as n_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
 
 
 def simhash_fingerprints(documents: DataFrame, bits: int = 32) -> DataFrame:

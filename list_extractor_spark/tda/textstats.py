@@ -1,8 +1,9 @@
 """Text-analysis operators: language ID, quality scoring, token counting,
-document fingerprinting (normalized hash + rolling-hash winnowing).  All
-JVM-side expressions (regexp/length/split/window) so they stay inside
-whole-stage codegen; every one has a DuckDB oracle (ANSI SQL or a generated
-VALUES literal from the bit-exact python hash replicas)."""
+document fingerprinting (normalized hash + rolling-hash winnowing).  JVM-side
+expressions (regexp/length/split/window) that stay inside whole-stage
+codegen, except where a per-document Arrow pass is the one measured kernel
+(winnowing, compression ratio); every one has a DuckDB oracle (ANSI SQL or a
+generated VALUES literal from the bit-exact python hash replicas)."""
 
 from __future__ import annotations
 
@@ -96,56 +97,6 @@ def fingerprints(documents: DataFrame) -> DataFrame:
     )
 
 
-# ASCII whitespace class shared with the python oracle replica (java \s)
-_WS = "[ \\t\\n\\x0B\\f\\r]+"
-
-
-def winnow_posting(
-    documents: DataFrame, k: int = 8, w: int = 4, strategy: str = "arrow"
-) -> DataFrame:
-    """(doc_id, fp) rows: rolling-hash winnowing fingerprints (the MOSS
-    algorithm, Schleimer/Wilkerson/Aiken SIGMOD'03) — the partial-overlap
-    dedup primitive exact hashing can't provide.
-
-    Normalize (lower, collapse ASCII whitespace) -> character k-grams ->
-    xxhash64 per gram -> minimum over each w-gram sliding window -> distinct
-    selected hashes per document.  Guarantees any shared substring of length
-    >= k + w - 1 contributes a shared fingerprint.
-
-    Default strategy is the shuffle-free Arrow form: A/B at 400k docs
-    (min-of-3, local[32]) measured 3.06 s vs 15.01 s for the explode+window
-    form — 4.9x, the window exchange carries one row PER CHARACTER POSITION
-    (~2x corpus bytes) that the per-task rolling min never pays.  Both
-    produce identical fingerprint sets (tested); ``strategy="window"`` keeps
-    the all-JVM plan for clusters where python workers are unavailable."""
-    if strategy == "arrow":
-        return winnow_posting_arrow(documents, k, w)
-    return winnow_posting_window(documents, k, w)
-
-
-def winnow_posting_window(documents: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
-    """Explode+window winnowing form (the A/B loser at 400k docs, kept for
-    python-worker-free deployments): explode(sequence) + substring + xxhash64
-    are whole-stage codegen; the only shuffle is the per-doc window
-    (partitionBy doc_id), the same single-exchange shape as shingle_posting.
-    No interpreted HOFs: the k-gram transform is explode-then-substring, not
-    transform()."""
-    t = F.regexp_replace(F.lower("text"), _WS, " ")
-    d = documents.select("doc_id", t.alias("t")).filter(F.length("t") >= k)
-    grams = d.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(1), F.length("t") - (k - 1))).alias("pos"),
-        F.col("t"),
-    ).select("doc_id", "pos", F.xxhash64(F.expr(f"substring(t, pos, {k})")).alias("h"))
-    win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-(w - 1), 0)
-    return (
-        grams.select("doc_id", "pos", F.min("h").over(win).alias("fp"))
-        .filter(F.col("pos") >= w)  # full windows only (standard winnowing)
-        .select("doc_id", "fp")
-        .distinct()
-    )
-
-
 def _xxh64_grams_ascii(buf, k: int):
     """Vectorized Spark xxhash64 (seed 42) over every k-byte sliding window
     of an ASCII uint8 buffer -> int64 array, bit-exact with F.xxhash64 on the
@@ -196,19 +147,30 @@ def _xxh64_grams_ascii(buf, k: int):
     return h.view(np.int64)
 
 
-def winnow_posting_arrow(documents: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
-    """Shuffle-FREE winnowing posting: normalize, k-gram-hash, and take the
-    per-doc rolling min entirely inside one mapInPandas pass — each document's
-    grams never leave the task that read it, so the window exchange of
-    winnow_posting (which carries ~2x the corpus bytes as one row per
-    character position) disappears; the emitted (doc_id, fp) rows are already
-    distinct (np.unique per doc), so there is no distinct shuffle either.
+def winnow_posting(documents: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
+    """(doc_id, fp) rows: rolling-hash winnowing fingerprints (the MOSS
+    algorithm, Schleimer/Wilkerson/Aiken SIGMOD'03) — the partial-overlap
+    dedup primitive exact hashing can't provide.
+
+    Normalize (lower, collapse ASCII whitespace) -> character k-grams ->
+    xxhash64 per gram -> minimum over each w-gram sliding window -> distinct
+    selected hashes per document.  Guarantees any shared substring of length
+    >= k + w - 1 contributes a shared fingerprint.
+
+    Shuffle-FREE: normalize, k-gram-hash and the per-doc rolling min all run
+    inside one mapInPandas pass, so each document's grams never leave the
+    task that read it, and the emitted (doc_id, fp) rows are already
+    distinct (np.unique per doc).  An explode + per-doc window form ships one
+    row per character position through an exchange and re-walks the string
+    for every gram (substring is O(pos) on UTF8String), so it is quadratic
+    on one large row: 19.42 s vs 7.91 s here on 40,000 docs (local[4]), and
+    a ~10 MB document ran past 12 min against 5.3 s.
 
     Hashing is the vectorized Spark-xxhash64 replica for ASCII documents
     (byte windows == char windows) with a bit-exact per-gram fallback
-    (fixtures/spark_hash.xxh64_str) for non-ASCII ones; result sets are
-    IDENTICAL to winnow_posting by construction and by test.  A/B at 400k
-    docs vs the explode+window form recorded in BENCH/BASELINE.md."""
+    (fixtures/spark_hash.xxh64_str) for non-ASCII ones, pinned against the
+    pure-Python replica by tests/test_fuzz.py.  NULL text and texts shorter
+    than k + w - 1 characters emit no row."""
     import re as _re
 
     import numpy as np
@@ -227,9 +189,7 @@ def winnow_posting_arrow(documents: DataFrame, k: int = 8, w: int = 4) -> DataFr
             ids, fps = [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
-                    # JVM twin drops NULL-text rows (split/substring of NULL
-                    # yields nothing); skip instead of raising (r7 fix)
-                    continue
+                    continue  # NULL text has no grams (the oracles skip it)
                 t = ws_re.sub(" ", text.lower())
                 if len(t) < k:
                     continue
@@ -371,7 +331,6 @@ def line_filter(
     min_words: int = 3,
     require_terminal_punct: bool = True,
     ban_substrings: tuple = ("lorem ipsum", "{", "javascript"),
-    strategy: str = "jvm",
 ) -> DataFrame:
     """C4-style line-level cleaning (Raffel et al. 2020 §2.2): keep only
     lines that look like prose — >= ``min_words`` words, terminated by
@@ -381,22 +340,14 @@ def line_filter(
     Output: (doc_id, text [kept lines, order preserved], n_lines, n_kept,
     drop_line_ratio).
 
-    ``strategy="jvm"`` (default, the oracle-graded form): one posexplode,
-    pure column predicates, reassembly via
+    One posexplode, pure column predicates, reassembly via
     sort_array(collect_list(struct)).line (codegen GetArrayStructFields,
     no interpreted transform()) — ONE exchange, keyed by doc_id (no window
-    needed: the keep decision is per line).
-
-    ``strategy="arrow"`` keeps the decision per DOCUMENT in a single
-    narrow mapInPandas pass — ZERO exchanges (the explode/groupBy form
-    ships one row per LINE through a corpus-wide shuffle purely to rejoin
-    lines that were already co-located).  Same winnowing/minhash lesson;
-    output equality with the jvm form is test-pinned, including the
-    rounding of drop_line_ratio."""
-    if strategy == "arrow":
-        return _line_filter_arrow(
-            documents, min_words, require_terminal_punct, ban_substrings
-        )
+    needed: the keep decision is per line).  A narrow per-document Arrow
+    form skips that exchange but measured slower here (1.34 s vs 1.13 s on
+    80,000 docs, local[4]): the exchange is cheap next to the Python
+    worker round trip.  NULL text emits no row; empty text is one empty
+    line."""
     lines = documents.select(
         "doc_id", F.posexplode(F.split("text", "\n")).alias("pos", "line")
     )
@@ -423,75 +374,6 @@ def line_filter(
             F.round(1 - F.col("n_kept") / F.col("n_lines"), 6),
         )
     )
-
-
-def _line_filter_arrow(
-    documents: DataFrame, min_words: int, require_terminal_punct: bool,
-    ban_substrings: tuple,
-) -> DataFrame:
-    """Narrow per-document form of line_filter (strategy='arrow'): rule
-    parity with the JVM expressions is deliberate and test-pinned —
-    ASCII-whitespace word split (java \\s), space-only trim, [.!?\"]\\s*$
-    terminal check, case-folded substring bans, and drop_line_ratio rounded
-    half-up on the shortest double repr (Spark F.round semantics)."""
-    import re
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import pandas as pd
-
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-    term = re.compile(r'[.!?"][ \t\n\x0b\f\r]*\Z')
-    bans = tuple(b.lower() for b in ban_substrings)
-    q6 = Decimal("0.000001")
-
-    out_schema = T.StructType(
-        [
-            documents.schema["doc_id"],
-            T.StructField("text", T.StringType(), True),
-            T.StructField("n_lines", T.LongType(), False),
-            T.StructField("n_kept", T.LongType(), False),
-            T.StructField("drop_line_ratio", T.DoubleType(), True),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            recs = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    # the JVM line_filter drops NULL-text rows (split(NULL)
-                    # explodes to nothing); skip instead of raising (r7 fix)
-                    continue
-                lines = text.split("\n")
-                kept = []
-                for line in lines:
-                    low = line.lower()
-                    ok = (
-                        len(ws.split(line.strip(" "))) >= min_words
-                        and (not require_terminal_punct or term.search(line))
-                        and not any(b in low for b in bans)
-                    )
-                    if ok:
-                        kept.append(line)
-                ratio = 1 - len(kept) / len(lines)
-                recs.append(
-                    (
-                        doc_id,
-                        "\n".join(kept),
-                        len(lines),
-                        len(kept),
-                        float(Decimal(repr(ratio)).quantize(q6, ROUND_HALF_UP)),
-                    )
-                )
-            if not recs:
-                continue  # empty frames carry object dtypes Arrow rejects
-            yield pd.DataFrame(
-                recs,
-                columns=["doc_id", "text", "n_lines", "n_kept",
-                         "drop_line_ratio"],
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(run, schema=out_schema)
 
 
 def repetition_signals(documents: DataFrame, n: int = 2) -> DataFrame:

@@ -19,7 +19,6 @@ from list_extractor_spark.engine.session import get_spark  # noqa: E402
 from list_extractor_spark.sources.loaders import TABLES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR  # keep oracles on the same sf
 
 
 def canon(v):
@@ -39,14 +38,21 @@ def normalize(rows, cols):
     return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
-def main():
-    only = set(sys.argv[1:])
-    spark = get_spark("contract-check", master="local[8]", shuffle_partitions=8)
+def duck_views(sf_dir):
+    """A DuckDB connection with one view per driver table present in sf_dir."""
     con = duckdb.connect()
     for t in TABLES:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
+        p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def main():
+    only = set(sys.argv[1:])
+    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR  # keep oracles on the same sf
+    spark = get_spark("contract-check", master="local[8]", shuffle_partitions=8)
+    con = duck_views(SF_DIR)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -67,49 +67,21 @@ def test_curate_corpus_keep_longest_policy(spark):
 
 
 def test_curate_filter_stages_are_narrow(spark):
-    """The quality -> line-filter prefix (the composite's actual arrow
-    form) must be exchange-FREE: quality filtering must not join back to
-    the corpus, and per-document line filtering needs no explode/groupBy
-    round trip.  The jvm line_filter keeps its one reassembly exchange."""
+    """The quality -> line-filter prefix of the composite must run ONE
+    exchange: quality filtering must not join back to the corpus, so the
+    only shuffle is the line filter's per-document reassembly."""
     docs = _docs(spark)
-
-    def prefix(strategy):
-        return (
-            line_filter(
-                quality_filter(docs, keep_text=True).filter("keep")
-                .select("doc_id", "text"),
-                require_terminal_punct=False,
-                strategy=strategy,
-            )
-            .select("doc_id", "text")
-            .filter(F.length("text") > 0)
+    prefix = (
+        line_filter(
+            quality_filter(docs, keep_text=True).filter("keep")
+            .select("doc_id", "text"),
+            require_terminal_punct=False,
         )
-
-    arrow_plan = prefix("arrow")._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in arrow_plan, arrow_plan
-    jvm_plan = prefix("jvm")._jdf.queryExecution().executedPlan().toString()
-    assert jvm_plan.count("Exchange hashpartitioning") == 1
-
-
-def test_line_filter_arrow_equals_jvm(spark):
-    """strategy='arrow' must reproduce the jvm form exactly — rules,
-    reassembly, counts, AND drop_line_ratio rounding — on the sf corpus
-    plus edge documents (empty text, ban markers, whitespace tails)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr("replace(text, '. ', '.\n')").alias("text"),
+        .select("doc_id", "text")
+        .filter(F.length("text") > 0)
     )
-    edge = spark.createDataFrame(
-        [("e1", "short\nthe quick brown fox jumps high.\n{ bad json }\n"
-                "JAVASCRIPT required here now.\nlorem ipsum dolor sit amet ok."),
-         ("e2", ""),
-         ("e3", "one two three four five.\n\n  trailing ws line here ok.  ")],
-        "doc_id string, text string",
-    )
-    d = docs.unionByName(edge)
-    a = sorted(map(tuple, line_filter(d, strategy="arrow").collect()))
-    j = sorted(map(tuple, line_filter(d).collect()))
-    assert a == j and len(a) == docs.count() + 3
+    plan = prefix._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_curate_drop_sets_broadcast_under_aqe(spark):

@@ -79,8 +79,10 @@ def test_xxh64_replica_fuzz_vs_spark(spark):
 
 
 def test_winnow_replica_fuzz_vs_spark(spark):
-    """Random whitespace-heavy texts: Spark winnow_posting must equal the
-    pure-python oracle replica (same normalize/k-gram/window-min rules)."""
+    """Random whitespace-heavy texts, plus a non-ASCII doc (the per-gram
+    hash fallback) and a too-short doc (no full window): Spark
+    winnow_posting must equal the pure-python oracle replica (same
+    normalize/k-gram/window-min rules)."""
     import random
     import re
 
@@ -95,6 +97,8 @@ def test_winnow_replica_fuzz_vs_spark(spark):
         n = rng.randrange(0, 30)
         t = "".join(rng.choice(words) + rng.choice(ws) for _ in range(n))
         rows.append((f"d{i:02d}", t))
+    rows += [("nonascii", "café résumé naïve déjà vu encore une fois"),
+             ("short", "tiny")]
     df = spark.createDataFrame(rows, "doc_id string, text string")
     got: dict = {}
     for r in winnow_posting(df, k=8, w=4).collect():
@@ -106,6 +110,7 @@ def test_winnow_replica_fuzz_vs_spark(spark):
             hs = [xxh64_str(t[i:i + 8]) for i in range(len(t) - 7)]
             want = {min(hs[i - 3:i + 1]) for i in range(3, len(hs))}
         assert got.get(doc_id, set()) == want, doc_id
+    assert got["nonascii"] and "short" not in got
 
 
 def test_full_pipeline_parity_on_adversarial_corpora(spark):

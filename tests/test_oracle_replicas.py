@@ -14,7 +14,8 @@ from list_extractor_spark.fixtures.contract_oracle import (
     spanify_python,
 )
 from list_extractor_spark.sources.spanify import spanify_documents
-from list_extractor_spark.tda.dedup import _tokens, shingle_posting
+from list_extractor_spark.fixtures.spark_hash import hash_str
+from list_extractor_spark.tda.dedup import _tokens, shingle_hash_stats
 
 NASTY = [
     "plain words here",
@@ -70,14 +71,25 @@ def test_token_replica_matches_spark(spark):
         assert got[doc_id] == _py_tokens(text), (doc_id, text)
 
 
+def _two_seed_hash(sh: str) -> int:
+    """The 64-bit shingle key of shingle_hash_stats: murmur3 at seed 42 in
+    the low word, at seed 0x3C6EF372 in the high word, as a signed long."""
+    h = (hash_str(sh, 0x3C6EF372) & 0xFFFFFFFF) << 32 | (hash_str(sh) & 0xFFFFFFFF)
+    return h - (1 << 64) if h & (1 << 63) else h
+
+
 def test_shingle_replica_matches_spark(spark):
+    """The Arrow shingle pass must hash exactly the shingle sets the
+    oracle's _py_shingles forms (same tokenizer, same join of n tokens)."""
     rows = [(str(i), t) for i, t in enumerate(NASTY)]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    got: dict = {d: set() for d, _ in rows}
-    for r in shingle_posting(df).collect():
-        got[r["doc_id"]].add(r["sh"])
+    got = {
+        r["doc_id"]: (list(r["sh_hash"]), r["n_sh"])
+        for r in shingle_hash_stats(df).collect()
+    }
     for doc_id, text in rows:
-        assert got[doc_id] == _py_shingles(text), (doc_id, text)
+        want = sorted({_two_seed_hash(sh) for sh in _py_shingles(text)})
+        assert got.get(doc_id, ([], 0)) == (want, len(want)), (doc_id, text)
 
 
 def test_round_half_up_matches_spark_and_duckdb_on_dyadic_ties(spark):

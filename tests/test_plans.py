@@ -164,25 +164,11 @@ def test_bloom_build_plan_has_no_global_collect_of_rows(spark):
     assert ("en", "s3") in bloom and ("en", "absent") not in bloom
 
 
-def test_winnow_posting_window_is_single_shuffle_jvm_only(spark):
-    """The window strategy must stay whole-stage codegen (no python workers,
-    no interpreted HOFs) with exactly one exchange (the per-doc window)."""
-    from list_extractor_spark.tda import textstats
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).limit(50)
-    plan = _plan(textstats.winnow_posting_window(docs))
-    assert "mapInPandas" not in plan and "ArrowEvalPython" not in plan
-    assert "transform(" not in plan  # explode+substring, not interpreted HOF
-    assert plan.count("Exchange") <= 2  # window shuffle (+ distinct reuses it)
-
-
 def test_winnow_posting_default_is_shuffle_free(spark):
-    """The default (arrow) winnowing strategy must have ZERO exchanges: the
-    per-doc rolling min runs inside the scan task, and the emitted rows are
-    already distinct — the A/B-measured 4.9x at 400k docs comes precisely
-    from this plan shape (scripts/bench_winnow_ab.py)."""
+    """The winnowing kernel must have ZERO exchanges: the per-doc rolling
+    min runs inside the scan task, and the emitted rows are already
+    distinct — its measured lead over an explode + per-doc window form
+    comes precisely from this plan shape."""
     from list_extractor_spark.tda import textstats
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
@@ -334,10 +320,11 @@ def test_decontaminate_train_side_is_narrow_broadcast_probe(spark):
 
 def test_minhash_doc_stats_is_shuffle_free_and_matches_relational(spark):
     """The fused Arrow signature pass (minhash_doc_stats) must be
-    scan-shaped — ZERO exchanges — and minhash_lsh_pairs' arrow strategy
-    must produce exactly the relational strategy's pairs (the vectorized
+    scan-shaped — ZERO exchanges — and minhash_lsh_pairs must produce
+    exactly the pairs of the pure-Python string-set oracle (the vectorized
     murmur3 replica is bit-exact, so only a 32-bit in-document shingle
     collision could diverge them — absent on the test corpora)."""
+    from list_extractor_spark.fixtures.contract_oracle import minhash_lsh_rows
     from list_extractor_spark.tda import dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
@@ -348,24 +335,11 @@ def test_minhash_doc_stats_is_shuffle_free_and_matches_relational(spark):
     for bands in (4, 8):
         a = sorted(map(tuple, dedup.minhash_lsh_pairs(
             docs, k=16, bands=bands, threshold=0.2, bucket_cap=50).collect()))
-        r = sorted(map(tuple, dedup.minhash_lsh_pairs(
-            docs, k=16, bands=bands, threshold=0.2, bucket_cap=50,
-            strategy="relational").collect()))
+        r = minhash_lsh_rows(
+            "/root/testdata/sf0.001", k=16, bands=bands, threshold=0.2,
+            bucket_cap=50,
+        )
         assert a == r and a, bands
-
-
-def test_window_shingle_posting_partitioning_reused_downstream(spark):
-    """The measured reason the window posting wins end-to-end (BENCH A/B):
-    its doc_id exchange partitioning must satisfy the distinct AND the
-    downstream doc_id aggregation — minhash signatures over the posting
-    plan exactly ONE shuffle exchange total."""
-    from list_extractor_spark.tda import dedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    plan = _plan(dedup.minhash_signatures(docs))
-    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_snapshot_joins_degrade_to_shuffle_past_threshold(spark):

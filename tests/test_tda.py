@@ -468,25 +468,6 @@ def test_asof_join_exotic_payload_names_and_reserved_guard(spark):
         asof_join(left, right.withColumn("_asof_row", F.lit(1)), "key", "ts", ["a.b"])
 
 
-def test_winnow_posting_arrow_equals_window_form(spark):
-    """The shuffle-free mapInPandas winnowing must produce the IDENTICAL
-    (doc_id, fp) set as the explode+window form, including a non-ASCII doc
-    (per-gram fallback) and a too-short doc (dropped by both)."""
-    base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).limit(50)
-    extra = spark.createDataFrame(
-        [("nonascii", "café résumé naïve déjà vu encore une fois"),
-         ("short", "tiny")],
-        schema="doc_id string, text string",
-    )
-    docs = base.unionByName(extra)
-    a = {(r["doc_id"], r["fp"]) for r in textstats.winnow_posting_window(docs).collect()}
-    b = {(r["doc_id"], r["fp"]) for r in textstats.winnow_posting_arrow(docs).collect()}
-    assert a == b and any(d == "nonascii" for d, _ in b)
-    assert not any(d == "short" for d, _ in b)
-
-
 def test_winnow_overlap_pairs_finds_lifted_paragraph(spark):
     """A document that LIFTS a substring from another (classic partial
     overlap: different lengths, shared span) must surface as a pair with
@@ -981,26 +962,6 @@ def test_mix_sources_random_configs_match_replica(spark):
         assert got == expect, f"seed {seed}"
 
 
-def test_shingle_posting_narrow_equals_window_form(spark):
-    """Both shingle-posting strategies must produce the identical
-    (doc_id, sh) set, including sub-n-token and empty docs."""
-    base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).limit(40)
-    extra = spark.createDataFrame(
-        [("two", "only two"), ("empty", ""), ("exact3", "exactly three tokens")],
-        schema="doc_id string, text string",
-    )
-    docs = base.unionByName(extra)
-    a = {(r["doc_id"], r["sh"])
-         for r in dedup.shingle_posting(docs, strategy="narrow").collect()}
-    b = {(r["doc_id"], r["sh"])
-         for r in dedup.shingle_posting(docs, strategy="window").collect()}
-    assert a == b
-    assert ("exact3", "exactly three tokens") in a
-    assert not any(d in ("two", "empty") for d, _ in a)
-
-
 def test_bucket16_matches_hashlib_and_rates_nest(spark):
     """The sampling bucket must equal int(md5(key)[:4], 16) computed by ANY
     engine (the portability claim hash_split is built on), and membership
@@ -1184,9 +1145,12 @@ def test_near_dup_resolve_distributed_matches_unionfind_on_random_graphs(spark):
 
 
 def test_minhash_arrow_edge_docs_match_relational(spark):
-    """Arrow and relational minhash strategies must agree on the awkward
+    """The Arrow minhash kernel must equal the pure-Python string-set
+    oracle (fixtures/contract_oracle.minhash_lsh_rows) on the awkward
     inputs: unicode, sub-n-token docs (excluded), empty text, tab/newline
     whitespace, and shingles past the vectorizer's long-string fallback."""
+    from list_extractor_spark.fixtures.contract_oracle import minhash_lsh_rows
+
     long_tok = "x" * 600  # one shingle > LONG_STRING_CUTOFF
     rows = [
         ("u1", "häuser straße münchen die straße ist lang und die häuser alt"),
@@ -1201,9 +1165,7 @@ def test_minhash_arrow_edge_docs_match_relational(spark):
     for bands in (4, 8):
         a = sorted(map(tuple, dedup.minhash_lsh_pairs(
             docs, k=16, bands=bands, threshold=0.1).collect()))
-        r = sorted(map(tuple, dedup.minhash_lsh_pairs(
-            docs, k=16, bands=bands, threshold=0.1,
-            strategy="relational").collect()))
+        r = minhash_lsh_rows(None, k=16, bands=bands, threshold=0.1, docs=rows)
         assert a == r, (bands, a, r)
     assert any(p[0] == "u1" and p[1] == "u2" for p in a)  # unicode pair found
     stats_ids = {
