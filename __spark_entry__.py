@@ -856,12 +856,13 @@ def _text_dsir_resample(spark, sf_dir):
 
 # DSIR oracle body, shared by text_dsir_score and (nested as a CTE) by
 # text_dsir_resample: replays the identical feature hashing, Laplace
-# log-ratio, and decimal partial sum as tda/retrieval.dsir_logweights.
+# log-ratio, and decimal partial sum as tda/retrieval.dsir_logweights.  The
+# split class is [\s\v]: Java's \s includes the vertical tab, RE2's does not.
 _DSIR_SQL = r"""
             WITH t AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
                      (source = 'src0') AS is_tgt,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS ts
+                     regexp_split_to_array(lower(trim(text)), '[\s\v]+') AS ts
               FROM documents
             ), uni AS (
               SELECT doc_id, is_tgt, ts[i] AS gram
@@ -1130,7 +1131,7 @@ def _stage_once(sf_dir: str | None, source: str | None, tag: str, build,
 
 
 def _sim_topk(spark, sf_dir):
-    # no spread: A/B'd (scripts/ab_spread_r07.py) — the repartition exchange
+    # no spread: A/B'd (OPTIMIZATION_r07.md) — the repartition exchange
     # costs more than the single-task explode+partial-agg it parallelizes
     emb = _load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     return similarity.brute_force_topk(emb, _query_vector(sf_dir), k=10)
@@ -2553,10 +2554,13 @@ def _oracle_sql_base() -> dict[str, str]:
                          / length(text), 4) AS upper_ratio
             FROM documents
         """,
-        # same feature SQL as text_quality, then the rule cascade in rule
-        # order (first failed rule wins — mirrors the reversed when() fold)
+        # same feature SQL as text_quality over text with NULL read as '',
+        # then the rule cascade in rule order (first failed rule wins —
+        # mirrors the reversed when() fold)
         "text_quality_filter": r"""
-            WITH q AS (
+            WITH d AS (
+              SELECT doc_id, coalesce(text, '') AS text FROM documents
+            ), q AS (
               SELECT doc_id,
                      length(text) AS n_chars,
                      len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
@@ -2568,7 +2572,7 @@ def _oracle_sql_base() -> dict[str, str]:
                            / len(regexp_split_to_array(trim(text), '\s+')), 4) AS mean_word_len,
                      round(length(regexp_replace(text, '[^A-Z]', '', 'g'))
                            / length(text), 4) AS upper_ratio
-              FROM documents
+              FROM d
             ), v AS (
               SELECT doc_id, n_chars, n_tokens,
                      CASE WHEN n_chars < 200 THEN 'too_short'
@@ -2630,6 +2634,7 @@ def _oracle_sql_base() -> dict[str, str]:
                      octet_length(encode(text)) AS n,
                      greatest(octet_length(encode(text)) // 4, 1) AS stripe
               FROM documents
+              WHERE text IS NOT NULL
             )
             SELECT doc_id, media_type, CAST(n AS BIGINT) AS n_bytes,
                    CAST(d.i AS INTEGER) AS dim_idx,

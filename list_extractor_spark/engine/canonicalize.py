@@ -226,23 +226,19 @@ def identity_edges(
     return r.unionByName(s)
 
 
-def apply_canonical_df(
-    triples: DataFrame, cmap: DataFrame, broadcast: bool | None = None
-) -> DataFrame:
+def apply_canonical_df(triples: DataFrame, cmap: DataFrame) -> DataFrame:
     """Rewrite subj and IRI objects through the canonical map.  Literal objects
     (obj_dt non-null) are never rewritten.
 
-    ``broadcast``: None (default) sizes the map against
-    spark.sql.autoBroadcastJoinThreshold via Catalyst plan stats
-    (engine/stats.fits_broadcast) — the canonical map is derived FROM
+    The map is broadcast only while it fits
+    spark.sql.autoBroadcastJoinThreshold by Catalyst plan stats
+    (engine/stats.maybe_broadcast) — the canonical map is derived FROM
     redirects ∪ sameAs, so at dump scale it has the same 10^7-10^8-row
     cardinality and must degrade to a shuffle join (AQE splits hub-target
-    skew at runtime); True/False force the regime."""
-    if broadcast is None:
-        from .stats import fits_broadcast
+    skew at runtime)."""
+    from .stats import maybe_broadcast
 
-        broadcast = fits_broadcast(cmap)
-    cm = F.broadcast(cmap) if broadcast else cmap
+    cm = maybe_broadcast(cmap)
     out = (
         triples.join(
             cm.select(F.col("uri").alias("subj"), F.col("canonical").alias("subj_c")),

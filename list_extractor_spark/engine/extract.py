@@ -57,9 +57,7 @@ def _sentinel_parts(subj: str):
     return ll, ls, _mint(list_elem_clean(ls), dbr_ns(ll))
 
 
-def _map_documents(
-    documents: DataFrame, cols, schema, emit, linker=None, skew_repartition=False
-) -> DataFrame:
+def _map_documents(documents: DataFrame, cols, schema, emit, linker=None) -> DataFrame:
     """One mapInArrow pass: ``emit(linker, *row, spans)`` per document, where
     ``row`` holds the ``cols`` values and ``spans`` the document's
     (kind, text, media_ref, offset) tuples; it returns the document's output
@@ -72,8 +70,6 @@ def _map_documents(
         *(F.col(c) if c in documents.columns else defaults[c].alias(c) for c in cols),
         "spans",
     )
-    if skew_repartition:
-        documents = documents.repartitionByRange(F.size("spans"), "doc_id")
     b_linker = documents.sparkSession.sparkContext.broadcast(linker)
     out_schema = to_arrow_schema(schema)
 
@@ -119,9 +115,7 @@ def _items(_linker, doc_id, lang, res_class, spans):
     return rows
 
 
-def extract_candidates(
-    documents: DataFrame, linkable_keys=None, skew_repartition: bool = False
-) -> DataFrame:
+def extract_candidates(documents: DataFrame, linkable_keys=None) -> DataFrame:
     """documents(doc_id, lang, res_class, spans[, res_target, res_classes])
     -> candidates (CANDIDATES_SCHEMA).
 
@@ -133,7 +127,7 @@ def extract_candidates(
     linker = DeferredLinker(linkable_keys if linkable_keys is not None else set())
     return _map_documents(
         documents, ("doc_id", "lang", "res_classes", "res_target"),
-        CANDIDATES_SCHEMA, _candidates, linker, skew_repartition,
+        CANDIDATES_SCHEMA, _candidates, linker,
     )
 
 

@@ -10,14 +10,13 @@ shuffled past it — see _auto_salt / engine/stats.fits_broadcast):
 
 Skew: hub mentions ("List of ..." pages link the same few entities millions of
 times) make hot join keys.  With a broadcast build side there is no shuffle so
-key skew costs nothing; the ``salt`` path is the shuffled variant for when the
+key skew costs nothing; the salted path is the shuffled regime for when the
 index outgrows the broadcast threshold: the probe side gets a deterministic
-salt column, the build side is exploded K ways, and AQE skew-join splitting
-handles the residue.  ``salt=None`` (the default) picks the regime by SIZE:
-the rank-1 index row count is bounded-counted against
-spark.sql.autoBroadcastJoinThreshold, the same adaptive pattern as
-canonicalize.canonical_map_df — nothing silently broadcasts an index that
-outgrew its snapshot.
+salt column, the build side is exploded AUTO_SALT ways, and AQE skew-join
+splitting handles the residue.  The regime follows the SIZE of the rank-1
+index against spark.sql.autoBroadcastJoinThreshold (_auto_salt), the same
+adaptive pattern as canonicalize.canonical_map_df — nothing silently
+broadcasts an index that outgrew its snapshot.
 """
 
 from __future__ import annotations
@@ -44,7 +43,6 @@ def resolve_links(
     candidates: DataFrame,
     mention_index: DataFrame,
     sameas: DataFrame,
-    salt: int | None = None,
 ) -> DataFrame:
     """candidates (with link_lang/link_surface on deferred rows) -> triples
     (doc_id, subj, pred, obj, obj_dt) with sentinels resolved.
@@ -54,8 +52,8 @@ def resolve_links(
     Splitting into linked/direct branches would make a lazy plan compute the
     upstream extract stage twice (each branch re-reads it).
 
-    ``salt``: None = size-adaptive (see _auto_salt); 0/1 = force broadcast;
-    >1 = force the salted shuffled-hash path with that many shards."""
+    The index join broadcasts while the index fits the broadcast threshold
+    and takes the salted shuffled-hash path past it (see _auto_salt)."""
     # top-1 semantics of the reference's wbsearchentities result (mapper.py:1566):
     # the snapshot carries a rank column; keep rank-1 rows only.
     idx = mention_index.filter(F.col("rank") == 1).select(
@@ -65,10 +63,8 @@ def resolve_links(
     )
     sa = sameas.select("wikidata_uri", "dbpedia_uri")
 
-    if salt is None:
-        salt = _auto_salt(idx)
-
-    if salt > 1:
+    salt = _auto_salt(idx)
+    if salt:
         # Shuffled-hash path with salting for when the index exceeds broadcast:
         # replicate the build side K ways, randomize the probe side's salt.
         idx = idx.crossJoin(

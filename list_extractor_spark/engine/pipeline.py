@@ -70,17 +70,9 @@ def page_types_df(spark: SparkSession, snapshots: dict):
 
 
 class Pipeline:
-    def __init__(
-        self,
-        spark: SparkSession,
-        run_dir: str | None = None,
-        salt: int | None = None,  # None = size-adaptive link join
-        skew_repartition: bool = False,
-    ):
+    def __init__(self, spark: SparkSession, run_dir: str | None = None):
         self.spark = spark
         self.run_dir = run_dir
-        self.salt = salt
-        self.skew_repartition = skew_repartition
         self._lineage: list[dict] = []
 
     # -- checkpoint helpers ------------------------------------------------
@@ -140,10 +132,7 @@ class Pipeline:
             if page_types is not None:
                 docs = attach_page_types(docs, page_types)
             candidates = self._checkpoint(
-                extract_candidates(
-                    docs, linkable_keys=linkable_keys,
-                    skew_repartition=self.skew_repartition,
-                ),
+                extract_candidates(docs, linkable_keys=linkable_keys),
                 "candidates",
             )
 
@@ -153,7 +142,7 @@ class Pipeline:
                                   "sec": 0.0, "reused": True})
         else:
             linked = self._checkpoint(
-                resolve_links(candidates, mention_index, sameas, salt=self.salt), "linked"
+                resolve_links(candidates, mention_index, sameas), "linked"
             )
 
         if canonicalize:
@@ -187,13 +176,11 @@ def run_pipeline(
     snapshots: dict,
     run_dir: str | None = None,
     canonicalize: bool = True,
-    salt: int | None = None,
-    skew_repartition: bool = False,
     use_page_types: bool = False,
 ) -> DataFrame:
     """Convenience wrapper: snapshots dict -> DataFrames -> Pipeline.run."""
     mention_index, sameas, redirects = snapshots_to_dfs(spark, snapshots)
-    pipe = Pipeline(spark, run_dir=run_dir, salt=salt, skew_repartition=skew_repartition)
+    pipe = Pipeline(spark, run_dir=run_dir)
     return pipe.run(
         documents,
         mention_index,

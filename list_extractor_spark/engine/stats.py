@@ -65,7 +65,7 @@ EST_BYTES_PER_ROW = 96
 _FITS_CACHE: dict = {}
 
 
-def fits_broadcast(df: DataFrame, est_bytes_per_row: int = EST_BYTES_PER_ROW) -> bool:
+def fits_broadcast(df: DataFrame) -> bool:
     """True while ``df`` fits spark.sql.autoBroadcastJoinThreshold — the SAME
     number Spark's own planner consults, read from the SAME Catalyst plan
     statistics, so for file-backed snapshots (the production shape) the
@@ -94,7 +94,7 @@ def fits_broadcast(df: DataFrame, est_bytes_per_row: int = EST_BYTES_PER_ROW) ->
     if key not in _FITS_CACHE:
         if len(_FITS_CACHE) > 64:
             _FITS_CACHE.clear()
-        row_budget = max(1, threshold // est_bytes_per_row)
+        row_budget = max(1, threshold // EST_BYTES_PER_ROW)
         n = df.limit(row_budget + 1).count()
         _FITS_CACHE[key] = n <= row_budget
     return _FITS_CACHE[key]

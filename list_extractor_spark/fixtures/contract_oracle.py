@@ -431,12 +431,13 @@ def simhash_fp_rows(sf_dir: str, bits: int = 32):
     return sorted(rows)
 
 
-def minhash_lsh_rows(sf_dir: str, k: int = 16, bands: int = 4, threshold: float = 0.2,
-                     bucket_cap: int | None = None, docs=None):
+def _minhash_bands(docs, k: int, bands: int):
+    """(shingle sets, LSH band buckets) of ``docs`` — the per-shingle hashing
+    that dominates every minhash oracle."""
     rows_per_band = k // bands
     shingle_sets = {
         d: _py_shingles(t)
-        for d, t in (docs if docs is not None else _sf_documents(sf_dir))
+        for d, t in docs
         if t is not None  # NULL text has no signature row on the Spark side
     }
     sigs = {}
@@ -452,6 +453,24 @@ def minhash_lsh_rows(sf_dir: str, k: int = 16, bands: int = 4, threshold: float 
             for r in range(rows_per_band):
                 h = hash_int(sig[b * rows_per_band + r], h)
             buckets.setdefault((b, h), []).append(doc_id)
+    return shingle_sets, buckets
+
+
+# several oracles re-derive the same sf_dir's minhash bands; keyed by the
+# documents file's identity as well, so a rewritten file is re-hashed
+_MINHASH_BANDS_CACHE: dict = {}
+
+
+def minhash_lsh_rows(sf_dir: str, k: int = 16, bands: int = 4, threshold: float = 0.2,
+                     bucket_cap: int | None = None, docs=None):
+    if docs is not None:
+        shingle_sets, buckets = _minhash_bands(docs, k, bands)
+    else:
+        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+        key = (sf_dir, st.st_mtime_ns, st.st_size, k, bands)
+        if key not in _MINHASH_BANDS_CACHE:
+            _MINHASH_BANDS_CACHE[key] = _minhash_bands(_sf_documents(sf_dir), k, bands)
+        shingle_sets, buckets = _MINHASH_BANDS_CACHE[key]
     cand = set()
     for members in buckets.values():
         if bucket_cap and len(members) > bucket_cap:
@@ -591,7 +610,7 @@ def dedup_corpus_sql(sf_dir: str) -> str:
 _CURATE_CLEAN_SQL = r"""
     WITH src AS (
       SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-             replace(text, '. ', '.' || chr(10)) AS text
+             replace(coalesce(text, ''), '. ', '.' || chr(10)) AS text
       FROM documents
     ), q AS (
       SELECT doc_id,
@@ -1206,7 +1225,7 @@ def media_resize_rows(sf_dir: str, width: int = 8, height: int = 8):
     rows = []
     for doc_id, text in _sf_documents(sf_dir):
         if text is None:
-            continue  # no row for NULL text (resize_media raises on it)
+            continue  # a NULL payload produces no row
         r = fake_resize(text.encode("utf-8"), width, height)
         rows.append((doc_id, _media_type(doc_id), width, height, sum(r)))
     return sorted(rows)

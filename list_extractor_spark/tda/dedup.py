@@ -162,7 +162,7 @@ def _hashed_pair_counts(documents: DataFrame, n: int, df_cap: int | None):
     # a single-threaded build locally (A/B: 1.87 s -> 1.20 s) and an OOM
     # cliff at scale.  Sort-merge reuses the cap window's sort on sh (no
     # extra sort in the plan) and spills gracefully; results identical
-    # (asserted in scripts/ab_selfjoin_r07.py and by the oracle).
+    # (asserted by the oracle; numbers in OPTIMIZATION_r07.md).
     return (
         a.join(b.hint("merge"), "sh")
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -505,7 +505,7 @@ def minhash_lsh_pairs(
     # compressed source through the checkpoint, so the planner broadcast the
     # banded table (4 rows/doc — corpus-sized at scale) as a hash relation;
     # sort-merge reuses the cap window's sort on (band_id, bh) and A/B'd
-    # 1.41 -> 1.16 s at sf1.0 (scripts/ab_banded_r07.py, identical outputs).
+    # 1.41 -> 1.16 s at sf1.0 (OPTIMIZATION_r07.md, identical outputs).
     cand = (
         banded.alias("x")
         .join(banded.hint("merge").alias("y"), ["band_id", "bh"])

@@ -75,9 +75,16 @@ def fake_feature(payload: bytes, dim: int = 4):
     ]
 
 
+def _with_payload(media: DataFrame) -> DataFrame:
+    """Rows with a payload: a NULL payload (a document with NULL text) has
+    nothing to decode, so it is dropped JVM-side before the python stage."""
+    return media.filter(F.col("payload").isNotNull())
+
+
 def extract_media_features(media: DataFrame, dim: int = 4) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads (mapInPandas):
-    the decode/resize/frame-sample slot of a multimodal training pipeline."""
+    the decode/resize/frame-sample slot of a multimodal training pipeline.
+    NULL payloads produce no row."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -90,7 +97,7 @@ def extract_media_features(media: DataFrame, dim: int = 4) -> DataFrame:
                 }
             )
 
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA)
+    return _with_payload(media).mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -136,7 +143,7 @@ def resize_media(media: DataFrame, width: int = 8, height: int = 8) -> DataFrame
                 }
             )
 
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
+    return _with_payload(media).mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
 FRAMES_SCHEMA = T.StructType(
@@ -155,7 +162,8 @@ def sample_frames(
     """Frame sampling for video rows: chunk the payload into fixed-size
     'frames' and keep every n-th — the 1->N output shape (rows out != rows
     in) a real decord/ffmpeg frame sampler produces inside mapInPandas.
-    Non-video rows are filtered JVM-side before the python stage."""
+    Non-video rows and NULL payloads are filtered JVM-side before the
+    python stage."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -170,9 +178,8 @@ def sample_frames(
                     out["checksum"].append(sum(frame))
             yield pd.DataFrame(out)
 
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        run, schema=FRAMES_SCHEMA
-    )
+    videos = _with_payload(media).filter(F.col("media_type") == "video")
+    return videos.mapInPandas(run, schema=FRAMES_SCHEMA)
 
 
 def media_stats(media: DataFrame) -> DataFrame:

@@ -40,7 +40,6 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..engine.stats import maybe_broadcast
-from .sampling import _bucket16
 
 
 def _tokens(documents: DataFrame) -> DataFrame:
@@ -235,7 +234,7 @@ def _java_ws_tokens(text: str) -> list[str]:
     uses Java ``split(regex, -1)`` — leading AND trailing empty strings are
     KEPT (empirically pinned: 'trailing tab\\t' tokenizes to
     ['trailing', 'tab', ''], and '' to ['']).  re.split matches exactly.
-    Bit-equality is test-pinned against the JVM strategy
+    Token-equality is test-pinned against that Spark expression
     (tests/test_redact_dsir.py) including the tab/multi-space/empty edges;
     like every tokenizer replica in this repo, non-ASCII case folding is the
     documented envelope (python .lower() vs UTF8String.toLowerCase)."""
@@ -243,8 +242,8 @@ def _java_ws_tokens(text: str) -> list[str]:
 
 
 def _gram_bucket_counts(text: str, n_buckets: int) -> dict[int, int]:
-    """Per-document {bucket: count} over unigrams + bigrams, md5-bucketed —
-    the python twin of the JVM strategy's _bucket16(gram) % n_buckets."""
+    """Per-document {bucket: count} over unigrams + bigrams: the first 16
+    bits of the gram's md5, mod n_buckets (tda/sampling's portable hash)."""
     md5 = hashlib.md5
     counts: dict[int, int] = {}
     prev = None
@@ -271,9 +270,9 @@ def _rhu(x: float, nd: int) -> Decimal:
 def _dsir_weights(counts: DataFrame, n_buckets: int) -> DataFrame:
     """(bucket, lr) Laplace-smoothed log-ratio table from a
     (bucket, q_cnt, p_cnt) distribution-count table (<= n_buckets rows).
-    Shared by both strategies so ln() always evaluates in the JVM — the
-    arrow strategy collects these rows rather than re-deriving lr in python
-    libm, keeping the two strategies bit-identical."""
+    ln() evaluates in the JVM — the score pass collects these rows rather
+    than re-deriving lr in python libm, so lr is the same double Spark SQL
+    (and the oracle's ln) computes."""
     totals = counts.groupBy().agg(
         F.sum("q_cnt").alias("_q_total"),
         F.sum("p_cnt").alias("_p_total"),
@@ -297,7 +296,6 @@ def dsir_logweights(
     documents: DataFrame,
     is_target,
     n_buckets: int = 4096,
-    strategy: str = "arrow",
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for Language
     Models via Importance Resampling"): score every raw-corpus document by how
@@ -318,96 +316,37 @@ def dsir_logweights(
 
     Output: (doc_id, n_feats, dsir_logweight) — n_feats = total gram
     occurrences, dsir_logweight rounded to 6 decimals.  Documents with NULL
-    text produce no row (JVM split(NULL) explodes to nothing; the arrow pass
-    skips them to match).
+    text produce no row.
 
     Determinism: the per-bucket log-ratio is rounded to 12 decimals and each
     gram OCCURRENCE contributes that value as DECIMAL(28,12) — the sum is
     exact and order-independent across partitionings, the same discipline as
     bm25_search / unigram_logprob / quantized PageRank (the oracle replays it
     as cnt * round(lr, 12) in decimal arithmetic, which is identical; the
-    arrow strategy uses the proven Decimal(repr(x)) HALF_UP replica on the
-    SAME JVM-computed lr doubles).
+    score pass uses the proven Decimal(repr(x)) HALF_UP replica on the
+    JVM-computed lr doubles).
 
-    strategy="arrow" (default; the 100-TB shape): TWO narrow mapInPandas
-    passes over the corpus and NOTHING corpus-sized ever shuffles or
-    materializes — the fit pass pre-aggregates each Arrow batch to at most
-    ``n_buckets`` (bucket, q, p) partial rows in python before the tiny
-    bucket-keyed exchange, and the score pass evaluates each document
-    against the collected weight table (<= 2^16 (bucket, lr) rows — bounded
-    by construction, which is the point of feature hashing) entirely inside
-    the scan task: ZERO exchanges, plan-tested.  Measured at 400k docs x 81
-    tokens (local[32]): 10.4 s vs 88 s for the jvm strategy — every jvm
-    variant pays for the 64M-row gram table somewhere (lazily checkpointing
-    it costs 38 s of materialization alone; NOT checkpointing re-runs the
-    window per consumer because branch attribute dedup defeats
-    ReuseExchange; both measured, BENCH/BASELINE.md).
-
-    strategy="jvm": all-relational form — posexplode + lead() window builds
-    the gram table (ONE corpus-wide doc_id exchange), a single bucket-keyed
-    aggregation fits both distributions, and the scoring side joins raw gram
-    occurrences to the unconditionally-broadcast weight table with map-side
-    partial aggregation per doc.  Kept for oracle-shaped auditing and as the
-    no-python fallback; bit-identical to arrow (test-pinned).
+    Plan (the 100-TB shape): TWO narrow mapInPandas passes over the corpus
+    and NOTHING corpus-sized ever shuffles or materializes — the fit pass
+    pre-aggregates each Arrow batch to at most ``n_buckets`` (bucket, q, p)
+    partial rows in python before the tiny bucket-keyed exchange, and the
+    score pass evaluates each document against the collected weight table
+    (<= 2^16 (bucket, lr) rows — bounded by construction, which is the
+    point of feature hashing) entirely inside the scan task: ZERO
+    exchanges, plan-tested.  Measured at 400k docs x 81 tokens (local[32]):
+    10.4 s vs 88 s for an all-relational posexplode + lead() window form,
+    which pays for the 64M-row gram table somewhere (BENCH/BASELINE.md).
+    That form won 1.4-1.9x at 5k-80k docs on a 4-core host, but needs ~3x
+    the heap at scale and no benchmark workload runs DSIR, so it is not
+    kept as a second regime.
     """
     if not 1 <= n_buckets <= (1 << 16):
         raise ValueError("dsir_logweights: n_buckets must be in [1, 65536]")
-    if strategy not in ("arrow", "jvm"):
-        raise ValueError(f"dsir_logweights: unknown strategy {strategy!r}")
     tgt_col = (
         F.col(is_target) if isinstance(is_target, str) else is_target
     ).cast("boolean")
     docs = documents.select("doc_id", tgt_col.alias("is_tgt"), "text")
-    if strategy == "arrow":
-        return _dsir_arrow(docs, n_buckets)
-    toks = docs.select(
-        "doc_id",
-        "is_tgt",
-        F.posexplode(F.split(F.lower(F.trim("text")), r"\s+")).alias(
-            "pos", "term"
-        ),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    seq = toks.withColumn("nxt", F.lead("term").over(w))
-    # unigram + bigram from ONE narrow Generate (F.concat is null when nxt
-    # is null -> the trailing token emits no bigram).  A unionAll of two
-    # branches would be the natural spelling, but Union reports
-    # UnknownPartitioning, which forfeits the window's doc_id exchange and
-    # makes BOTH doc-side aggregations below re-shuffle (measured in the
-    # physical plan); the Generate preserves it.
-    grams = (
-        seq.select(
-            "doc_id",
-            "is_tgt",
-            F.explode(
-                F.array("term", F.concat("term", F.lit(" "), "nxt"))
-            ).alias("gram"),
-        )
-        .filter(F.col("gram").isNotNull())
-        .select(
-            "doc_id",
-            "is_tgt",
-            (_bucket16(F.col("gram")) % n_buckets).alias("bucket"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # ONE corpus pass fits BOTH distributions (count(*) = raw, sum(is_tgt)
-    # = target) and the totals then aggregate the <= n_buckets-row result —
-    # separate raw/tgt/totals scans would read the gram table three times
-    counts = grams.groupBy("bucket").agg(
-        F.count("*").alias("q_cnt"),
-        F.sum(F.col("is_tgt").cast("long")).alias("p_cnt"),
-    ).localCheckpoint(eager=False)
-    scored = grams.join(F.broadcast(_dsir_weights(counts, n_buckets)), "bucket")
-    return scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_feats"),
-        F.round(
-            F.sum(
-                F.round(F.col("lr"), 12).cast("decimal(28,12)")
-            ).cast("double"),
-            6,
-        ).alias("dsir_logweight"),
-    )
+    return _dsir_arrow(docs, n_buckets)
 
 
 def dsir_resample(
@@ -416,7 +355,6 @@ def dsir_resample(
     n_keep: int,
     n_buckets: int = 4096,
     temperature: float = 1.0,
-    strategy: str = "arrow",
 ) -> DataFrame:
     """DSIR's selection step: resample ``n_keep`` documents with probability
     proportional to exp(dsir_logweight / temperature) via the Gumbel-top-k
@@ -443,9 +381,7 @@ def dsir_resample(
         raise ValueError("dsir_resample: n_keep must be >= 1")
     if temperature <= 0:
         raise ValueError("dsir_resample: temperature must be > 0")
-    scored = dsir_logweights(
-        documents, is_target, n_buckets=n_buckets, strategy=strategy
-    )
+    scored = dsir_logweights(documents, is_target, n_buckets=n_buckets)
     hx = F.md5(F.col("doc_id").cast("string"))
     digit = lambda i: (  # noqa: E731
         F.instr(F.lit("0123456789abcdef"), F.substring(hx, i, 1)) - 1
@@ -507,8 +443,8 @@ def _dsir_arrow(docs: DataFrame, n_buckets: int) -> DataFrame:
         F.sum("q_cnt").alias("q_cnt"), F.sum("p_cnt").alias("p_cnt")
     )
     # bounded collect BY CONSTRUCTION (<= n_buckets <= 2^16 rows) — the same
-    # class as the IVF centroid collect; lr doubles come from the shared JVM
-    # expression so both strategies round the identical values
+    # class as the IVF centroid collect; lr doubles come from the JVM
+    # expression (_dsir_weights)
     lw = {
         row["bucket"]: _rhu(row["lr"], 12)
         for row in _dsir_weights(counts, n_buckets).collect()

@@ -81,10 +81,12 @@ def quality_scores(documents: DataFrame, extra_cols: tuple = ()) -> DataFrame:
         *extra_cols,
         n_chars.alias("n_chars"),
         n_tokens.alias("n_tokens"),
-        F.round(n_punct / n_chars, 4).alias("punct_ratio"),
+        # try_divide: empty text has no characters, so its per-char ratios
+        # are NULL (as in the SQL oracles) instead of a DIVIDE_BY_ZERO
+        F.round(F.try_divide(n_punct, n_chars), 4).alias("punct_ratio"),
         F.round(n_stop / n_tokens, 4).alias("stopword_ratio"),
         F.round((n_chars - n_tokens + 1) / n_tokens, 4).alias("mean_word_len"),
-        F.round(n_upper / n_chars, 4).alias("upper_ratio"),
+        F.round(F.try_divide(n_upper, n_chars), 4).alias("upper_ratio"),
     )
 
 
@@ -296,10 +298,12 @@ def quality_filter(
     quality_scores features (no UDF, no shuffle); aggregate drop accounting
     is a cheap groupBy("reason") the caller can run on the result.
     Returns (doc_id, n_chars, n_tokens, keep, reason); reason is null for
-    kept documents."""
+    kept documents.  NULL text is judged as empty text (too_short under the
+    default rules), never kept as clean."""
     r = dict(QUALITY_RULES)
     if rules:
         r.update(rules)
+    documents = documents.withColumn("text", F.coalesce("text", F.lit("")))
     q = quality_scores(documents, extra_cols=("text",) if keep_text else ())
     checks = [
         ("too_short", F.col("n_chars") < r["min_chars"]),

@@ -7,7 +7,7 @@ Cluster usage (north_rule: spark-submit --py-files on a multi-executor cluster):
         --input  /data/documents_parquet \
         --snapshots /data/snapshots \
         --output /data/graph \
-        --run-dir /data/runs/run1 [--salt 8] [--skew-repartition]
+        --run-dir /data/runs/run1
 
 Local smoke (no cluster):
 
@@ -45,11 +45,6 @@ def main():
     ap.add_argument("--snapshots", help="dir with mention_index/sameas/redirects parquet")
     ap.add_argument("--output", required=True, help="output graph parquet dir")
     ap.add_argument("--run-dir", default=None, help="checkpoint dir (enables resume)")
-    ap.add_argument(
-        "--salt", type=int, default=None,
-        help="link-join salt factor (default: size-adaptive; 0 forces broadcast)",
-    )
-    ap.add_argument("--skew-repartition", action="store_true")
     ap.add_argument("--no-canonicalize", action="store_true")
     ap.add_argument("--turtle", default=None, help="also write a .ttl parity file")
     ap.add_argument("--demo", action="store_true", help="use the synthetic fixture corpus")
@@ -88,9 +83,7 @@ def main():
             os.path.join(args.snapshots, "redirects")
         )
 
-    pipe = Pipeline(
-        spark, run_dir=args.run_dir, salt=args.salt, skew_repartition=args.skew_repartition
-    )
+    pipe = Pipeline(spark, run_dir=args.run_dir)
     t0 = time.time()
     triples = pipe.run(
         documents, mention_index, sameas, redirects,

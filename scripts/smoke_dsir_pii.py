@@ -95,9 +95,8 @@ def build_docs(spark):
 
 
 def main():
-    # the default arrow strategy fits the 8g default heap at this scale
-    # (nothing corpus-sized materializes); strategy="jvm" would need ~24g
-    # here — its 64M-row gram window sorts across CPUS concurrent tasks
+    # the two narrow Arrow passes fit the 8g default heap at this scale
+    # (nothing corpus-sized materializes)
     spark = get_spark(
         "smoke-dsir-pii", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS)
     )

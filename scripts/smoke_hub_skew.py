@@ -118,7 +118,7 @@ def main():
     cmap = spark.read.parquet(cmap_dir)
 
     t0 = time.time()
-    out = apply_canonical_df(triples, cmap)  # broadcast=None -> demoted
+    out = apply_canonical_df(triples, cmap)  # over budget -> demoted
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan, "apply was not demoted"
     n_rewritten = out.filter(F.col("obj") == CANON).count()

@@ -66,6 +66,18 @@ def test_curate_corpus_keep_longest_policy(spark):
     assert "a2" in ids and "a1" not in ids
 
 
+def test_quality_filter_judges_null_text_as_empty(spark):
+    """A document with NULL text is dropped as too_short, exactly like an
+    empty one, and is never kept as clean."""
+    docs = spark.createDataFrame(
+        [("n", None), ("e", ""), ("g", _GOOD)], "doc_id string, text string"
+    )
+    rows = {r["doc_id"]: r for r in quality_filter(docs).collect()}
+    assert (rows["n"]["keep"], rows["n"]["reason"]) == (False, "too_short")
+    assert tuple(rows["n"])[1:] == tuple(rows["e"])[1:]
+    assert rows["g"]["keep"] is True
+
+
 def test_curate_filter_stages_are_narrow(spark):
     """The quality -> line-filter prefix of the composite must run ONE
     exchange: quality filtering must not join back to the corpus, so the

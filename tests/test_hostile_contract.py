@@ -1,11 +1,13 @@
-"""Hostile-input harness for the graded near-dup, winnowing and line-filter
-queries: the sf0.001 driver documents plus adversarial rows, each query run
-on Spark and graded against its oracle_sql() entry the way
-scripts/check_contract.py grades it (same DuckDB views, same canon /
-normalize).  Every Arrow kernel behind these queries (shingle_hash_stats,
-minhash_doc_stats, winnow_posting) and the JVM line filter must equal the
-oracle on NULL, empty and whitespace-only text, non-BMP and combining
-Unicode, boilerplate and whitespace-tail lines, and one large document."""
+"""Hostile-input harness for the graded near-dup, winnowing, line-filter,
+quality, DSIR and media queries: the sf0.001 contract documents plus
+adversarial rows, each query run on Spark and graded against its
+oracle_sql() entry the way scripts/check_contract.py grades it (same DuckDB
+views, same canon / normalize).  Every Arrow kernel behind these queries
+(shingle_hash_stats, minhash_doc_stats, winnow_posting, the DSIR fit and
+score passes, the media feature / resize / frame passes) and the JVM line
+and quality filters must equal the oracle on NULL, empty and
+whitespace-only text, non-BMP and combining Unicode, boilerplate and
+whitespace-tail lines, and one large document."""
 
 import importlib.util
 import os
@@ -28,6 +30,12 @@ QUERIES = [
     "dedup_winnow_overlap",
     "text_line_filter",
     "text_curate_pipeline",
+    "text_quality_filter",
+    "text_dsir_score",
+    "text_dsir_resample",
+    "media_features",
+    "media_resize",
+    "media_frames",
 ]
 # 15,000 words of the corpus vocabulary (81,696 ASCII chars, 146x the
 # largest sf0.001 doc): under quality_filter's 100,000-char cap, so the
@@ -65,6 +73,7 @@ def _hostile_rows(vocab):
         (900009, "one two three four five.\n\n  trailing ws line here ok.  "),
         (900010, "spaces before the end.   \nand tabs after the stop.\t\t"),
         (900011, large),
+        (900014, None),  # a NULL video row (doc_id % 3 == 2) for media_frames
     ]
 
 

@@ -81,17 +81,19 @@ def test_parallelism_invariance(spark, corpus, snapshots, documents_df):
 
 
 def test_salted_link_join_same_result(spark, corpus, snapshots, documents_df):
-    plain = _collect_triples(run_pipeline(spark, documents_df, snapshots, salt=0))
-    salted = _collect_triples(run_pipeline(spark, documents_df, snapshots, salt=4))
+    """Past the broadcast threshold the link join takes its salted
+    shuffled-hash regime; the triples equal the broadcast regime's."""
+    plain = _collect_triples(run_pipeline(spark, documents_df, snapshots))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        df = run_pipeline(spark, documents_df, snapshots)
+        assert "mi_salt" in df._jdf.queryExecution().executedPlan().toString()
+        salted = _collect_triples(df)
+    finally:
+        spark.conf.set(key, old)
     assert plain == salted
-
-
-def test_skew_repartition_same_result(spark, corpus, snapshots, documents_df):
-    base = _collect_triples(run_pipeline(spark, documents_df, snapshots))
-    skewed = _collect_triples(
-        run_pipeline(spark, documents_df, snapshots, skew_repartition=True)
-    )
-    assert base == skewed
 
 
 def test_canonicalization_spark_matches_oracle(spark, snapshots):

@@ -39,9 +39,9 @@ def test_link_join_is_broadcast(spark):
 
 def test_link_join_auto_switches_to_salted_past_threshold(spark):
     """Size-adaptive regime: when the rank-1 mention index exceeds the
-    broadcast budget, the default (salt=None) path must pick the salted
-    shuffled-hash join — visible as the mi_salt machinery in the plan — and
-    produce exactly the triples the forced-broadcast path produces."""
+    broadcast budget, resolve_links must pick the salted shuffled-hash join
+    — visible as the mi_salt machinery in the plan — and produce exactly the
+    triples the broadcast regime produces under the default budget."""
     from list_extractor_spark.engine.linking import AUTO_SALT, _auto_salt
 
     snaps = make_snapshots()
@@ -52,18 +52,20 @@ def test_link_join_auto_switches_to_salted_past_threshold(spark):
     keys = {(r["lang"], r["surface"]) for r in mi.select("lang", "surface").collect()}
     cand = extract_candidates(resolve_redirects(docs, rd), linkable_keys=keys)
     idx = mi.filter(F.col("rank") == 1)
+    # default budget: tiny fixture index -> broadcast regime
+    assert _auto_salt(idx) == 0
+    plain = resolve_links(cand, mi, sa)
+    assert "mi_salt" not in _plan(plain)
+    want = sorted(map(tuple, plain.collect()))
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        # default budget: tiny fixture index -> broadcast regime
-        assert _auto_salt(idx) == 0
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
         assert _auto_salt(idx) == AUTO_SALT
-        auto = resolve_links(cand, mi, sa)  # salt=None -> salted under 1-byte budget
+        auto = resolve_links(cand, mi, sa)  # salted under the 1-byte budget
         assert "mi_salt" in _plan(auto)
         got = sorted(map(tuple, auto.collect()))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    want = sorted(map(tuple, resolve_links(cand, mi, sa, salt=0).collect()))
     assert got == want
 
 
@@ -189,7 +191,13 @@ def test_salted_link_and_sink_have_no_ansi_abs_hash(spark):
         corpus_to_rows(make_corpus(4, hub_every=0)), schema=DOCUMENTS_SCHEMA
     )
     cand = extract_candidates(resolve_redirects(docs, rd), linkable_keys=set())
-    plan = _plan(resolve_links(cand, mi, sa, salt=4))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+        plan = _plan(resolve_links(cand, mi, sa))  # the salted regime
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "mi_salt" in plan, plan
     assert "abs(hash" not in plan, plan
     # and the poison value itself survives pmod (would throw under abs)
     row = spark.sql("select pmod(-2147483648, 8) as v").first()
@@ -348,7 +356,7 @@ def test_snapshot_joins_degrade_to_shuffle_past_threshold(spark):
     hint-forced: real dumps are 10^7-10^8 rows, far past any broadcast
     budget.  With the budget dropped to 1 byte every one of them must plan
     WITHOUT a broadcast build side — and produce exactly the rows the
-    forced-broadcast regime produces."""
+    broadcast regime produces under the default budget."""
     from list_extractor_spark.engine.canonicalize import (
         apply_canonical_df,
         canonical_map_df,

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from list_extractor_spark.tda.redact import PII_PATTERNS, redact_pii
-from list_extractor_spark.tda.retrieval import dsir_logweights
+from list_extractor_spark.tda.retrieval import _java_ws_tokens, dsir_logweights
 
 
 def _redact(spark, text):
@@ -81,12 +81,12 @@ class TestRedactPII:
             assert "\\d" not in pat and "\\w" not in pat
 
 
-def _py_dsir(docs, targets, n_buckets):
+def _py_dsir(docs, targets, n_buckets, tokenize=lambda t: t.strip().lower().split()):
     """Pure-python replica of dsir_logweights (md5 buckets, Laplace
     log-ratio, 12-dp HALF_UP partials summed exactly, 6-dp final)."""
 
     def grams(text):
-        ts = text.strip().lower().split()
+        ts = tokenize(text)
         return ts + [f"{a} {b}" for a, b in zip(ts, ts[1:])]
 
     def bucket(g):
@@ -144,22 +144,13 @@ class TestDSIR:
         expected = _py_dsir(DSIR_DOCS, {"t1", "t2"}, 512)
         assert scored == expected
 
-    def test_jvm_strategy_matches_replica_too(self, spark):
-        df = spark.createDataFrame(
-            [(k, v, k.startswith("t")) for k, v in DSIR_DOCS.items()],
-            "doc_id string, text string, is_tgt boolean",
-        )
-        rows = dsir_logweights(
-            df, F.col("is_tgt"), n_buckets=512, strategy="jvm"
-        ).collect()
-        got = {r.doc_id: (r.n_feats, r.dsir_logweight) for r in rows}
-        assert got == _py_dsir(DSIR_DOCS, {"t1", "t2"}, 512)
-
     def test_arrow_equals_jvm_on_whitespace_edges(self, spark):
-        # the arrow tokenizer replica must reproduce JVM
-        # split(lower(trim(text)), '\s+') semantics exactly: trim strips
-        # 0x20 only, leading tab keeps the empty first token, trailing
-        # separators drop, empty text tokenizes to [''], runs collapse
+        # the score pass re-derives Spark's split(lower(trim(text)), '\s+')
+        # in python; its tokens must equal the Spark expression's on the
+        # edges (trim strips 0x20 only, a leading tab keeps an empty first
+        # token, a trailing separator an empty last one, empty text
+        # tokenizes to [''], runs collapse), and the scores must equal the
+        # replica fed Spark's own tokens
         docs = [
             ("a", "Plain Words Here", True),
             ("b", "  padded  with   runs  ", False),
@@ -174,30 +165,34 @@ class TestDSIR:
         df = spark.createDataFrame(
             docs, "doc_id string, text string, is_tgt boolean"
         )
-        key = lambda r: r.doc_id  # noqa: E731
-        arrow = sorted(
-            dsir_logweights(df, F.col("is_tgt"), n_buckets=64).collect(),
-            key=key,
+        jvm_tokens = {
+            r.text: r.ts
+            for r in df.select(
+                "text", F.split(F.lower(F.trim("text")), r"\s+").alias("ts")
+            ).collect()
+        }
+        assert {t: _java_ws_tokens(t) for _, t, _ in docs} == jvm_tokens
+        got = {
+            r.doc_id: (r.n_feats, r.dsir_logweight)
+            for r in dsir_logweights(df, F.col("is_tgt"), n_buckets=64).collect()
+        }
+        want = _py_dsir(
+            {d: t for d, t, _ in docs},
+            {d for d, _, tgt in docs if tgt},
+            64,
+            tokenize=jvm_tokens.__getitem__,
         )
-        jvm = sorted(
-            dsir_logweights(
-                df, F.col("is_tgt"), n_buckets=64, strategy="jvm"
-            ).collect(),
-            key=key,
-        )
-        assert arrow == jvm
-        assert len(arrow) == len(docs)
+        assert got == want
+        assert len(got) == len(docs)
 
     def test_null_text_drops_doc_both_strategies(self, spark):
+        # the name predates the deleted JVM form; the Arrow form is the one
         df = spark.createDataFrame(
             [("a", "some text", True), ("b", None, False)],
             "doc_id string, text string, is_tgt boolean",
         )
-        for strat in ("arrow", "jvm"):
-            got = dsir_logweights(
-                df, F.col("is_tgt"), n_buckets=64, strategy=strat
-            ).collect()
-            assert [r.doc_id for r in got] == ["a"], strat
+        got = dsir_logweights(df, F.col("is_tgt"), n_buckets=64).collect()
+        assert [r.doc_id for r in got] == ["a"]
 
     def test_arrow_score_pass_has_zero_exchanges(self, spark):
         # the 100-TB claim: nothing corpus-sized ever shuffles — the score
@@ -299,30 +294,3 @@ class TestDSIR:
         )
         with pytest.raises(ValueError):
             dsir_logweights(df, F.col("is_tgt"), n_buckets=1 << 17)
-
-    def test_jvm_scoring_side_plan_shape(self, spark):
-        # the jvm strategy's post-checkpoint scoring plan must aggregate raw
-        # gram occurrences per doc in ONE exchange whose input is already
-        # partially aggregated (one row per doc per task) — no
-        # (doc_id, bucket) intermediate shuffle — and the weight join must
-        # be a broadcast, never a shuffle join
-        df = spark.createDataFrame(
-            [(k, v, k.startswith("t")) for k, v in DSIR_DOCS.items()],
-            "doc_id string, text string, is_tgt boolean",
-        )
-        plan = (
-            dsir_logweights(df, F.col("is_tgt"), n_buckets=512, strategy="jvm")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        import re
-
-        doc_keyed = re.findall(r"Exchange hashpartitioning\(doc_id[^,]*,", plan)
-        assert len(doc_keyed) == 1, plan
-        assert "hashpartitioning(doc_id" not in plan.replace(
-            doc_keyed[0], "", 1
-        ), plan
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan, plan
-        assert "partial_sum" in plan  # map-side combine before the exchange
