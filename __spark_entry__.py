@@ -1899,7 +1899,7 @@ def _oracle_sql_base() -> dict[str, str]:
         "dedup_containment": r"""
             WITH toks AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS t
+                     regexp_split_to_array(lower(trim(text)), '[\s\v]+') AS t
               FROM documents
             ), sh AS (
               SELECT doc_id,
@@ -1924,7 +1924,7 @@ def _oracle_sql_base() -> dict[str, str]:
         "dedup_shingle_jaccard": r"""
             WITH toks AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS t
+                     regexp_split_to_array(lower(trim(text)), '[\s\v]+') AS t
               FROM documents
             ), sh AS (
               SELECT doc_id,
@@ -1948,7 +1948,7 @@ def _oracle_sql_base() -> dict[str, str]:
         "dedup_decontaminate": r"""
             WITH tr AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS t
+                     regexp_split_to_array(lower(trim(text)), '[\s\v]+') AS t
               FROM documents
             ), trs AS (
               SELECT doc_id, array_to_string(t[i:i+4], ' ') AS sh
@@ -1956,7 +1956,7 @@ def _oracle_sql_base() -> dict[str, str]:
               WHERE len(t) >= 5
             ), ev AS (
               SELECT 'e' || CAST(doc_id AS VARCHAR) AS eval_id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS t
+                     regexp_split_to_array(lower(trim(text)), '[\s\v]+') AS t
               FROM documents WHERE doc_id % 29 = 3
             ), evs AS (
               SELECT DISTINCT eval_id, array_to_string(t[i:i+4], ' ') AS sh
@@ -1971,7 +1971,7 @@ def _oracle_sql_base() -> dict[str, str]:
         "dedup_span_windows": r"""
             WITH toks AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     regexp_split_to_array(trim(text), '\s+') AS t
+                     regexp_split_to_array(trim(text), '[\s\v]+') AS t
               FROM documents
             ), wins AS (
               SELECT doc_id, CAST(gs AS INT) AS pos,
@@ -1992,7 +1992,7 @@ def _oracle_sql_base() -> dict[str, str]:
         "dedup_span_removal": r"""
             WITH toks AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     regexp_split_to_array(trim(text), '\s+') AS t
+                     regexp_split_to_array(trim(text), '[\s\v]+') AS t
               FROM documents
             ), wins AS (
               SELECT doc_id, CAST(gs AS INT) AS pos,
@@ -2068,7 +2068,7 @@ def _oracle_sql_base() -> dict[str, str]:
         """,
         "text_token_counts": r"""
             SELECT doc_id,
-                   len(regexp_split_to_array(trim(text), '\s+')) AS n_ws_tokens,
+                   len(regexp_split_to_array(trim(text), '[\s\v]+')) AS n_ws_tokens,
                    CAST(ceil(length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g')) / 4.0)
                         AS BIGINT) AS n_bpe_est
             FROM documents
@@ -2100,8 +2100,8 @@ def _oracle_sql_base() -> dict[str, str]:
         "text_chunk_documents": r"""
             WITH t AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     regexp_split_to_array(trim(text), '\s+') AS ts,
-                     len(regexp_split_to_array(trim(text), '\s+')) AS n
+                     regexp_split_to_array(trim(text), '[\s\v]+') AS ts,
+                     len(regexp_split_to_array(trim(text), '[\s\v]+')) AS n
               FROM documents
             ), c AS (
               SELECT doc_id, ts, n, i AS chunk_idx
@@ -2119,7 +2119,7 @@ def _oracle_sql_base() -> dict[str, str]:
         "text_top_ngrams": r"""
             WITH t AS (
               SELECT doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS ts
+                     regexp_split_to_array(lower(trim(text)), '[\s\v]+') AS ts
               FROM documents
             ), g AS (
               SELECT doc_id, ts[i] || ' ' || ts[i+1] AS gram
@@ -2231,7 +2231,7 @@ def _oracle_sql_base() -> dict[str, str]:
         "text_tfidf": r"""
             WITH t AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS ts
+                     regexp_split_to_array(lower(trim(text)), '[\s\v]+') AS ts
               FROM documents
             ), tok AS (
               SELECT doc_id, unnest(ts) AS term FROM t
@@ -2257,8 +2257,8 @@ def _oracle_sql_base() -> dict[str, str]:
         "text_bm25_search": r"""
             WITH d AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS ts,
-                     len(regexp_split_to_array(trim(text), '\s+')) AS dl
+                     regexp_split_to_array(lower(trim(text)), '[\s\v]+') AS ts,
+                     len(regexp_split_to_array(trim(text), '[\s\v]+')) AS dl
               FROM documents
             ), c AS (
               SELECT count(*) AS n_docs,
@@ -2296,7 +2296,7 @@ def _oracle_sql_base() -> dict[str, str]:
         "text_unigram_logprob": r"""
             WITH t AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS ts
+                     regexp_split_to_array(lower(trim(text)), '[\s\v]+') AS ts
               FROM documents
             ), tok AS (
               SELECT doc_id, unnest(ts) AS term FROM t
@@ -2396,7 +2396,7 @@ def _oracle_sql_base() -> dict[str, str]:
         "text_repetition": r"""
             WITH t AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS ts
+                     regexp_split_to_array(lower(trim(text)), '[\s\v]+') AS ts
               FROM documents
             ), g AS (
               SELECT doc_id, ts[i] || ' ' || ts[i+1] AS gram
@@ -2424,8 +2424,8 @@ def _oracle_sql_base() -> dict[str, str]:
               FROM l, unnest(generate_series(1, len(ls))) AS u(i)
             ), v AS (
               SELECT doc_id, pos, line, n_lines,
-                     (len(regexp_split_to_array(trim(line), '\s+')) >= 3
-                      AND regexp_matches(line, '[.!?"]\s*$')
+                     (len(regexp_split_to_array(trim(line), '[\s\v]+')) >= 3
+                      AND regexp_matches(line, '[.!?"][\s\v]*$')
                       AND lower(line) NOT LIKE '%lorem ipsum%'
                       AND lower(line) NOT LIKE '%{%'
                       AND lower(line) NOT LIKE '%javascript%') AS keep
@@ -2524,7 +2524,7 @@ def _oracle_sql_base() -> dict[str, str]:
         "text_pack_documents": r"""
             WITH t AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
+                     CAST(len(regexp_split_to_array(trim(text), '[\s\v]+')) AS BIGINT)
                          AS n_tokens,
                      ((strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
                     + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
@@ -2543,13 +2543,13 @@ def _oracle_sql_base() -> dict[str, str]:
         "text_quality": r"""
             SELECT doc_id,
                    length(text) AS n_chars,
-                   len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
+                   len(regexp_split_to_array(trim(text), '[\s\v]+')) AS n_tokens,
                    round(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
                          / length(text), 4) AS punct_ratio,
                    round(len(regexp_extract_all(lower(text), '\b(the|and|of|a|to|in|is|it)\b'))
-                         / len(regexp_split_to_array(trim(text), '\s+')), 4) AS stopword_ratio,
-                   round((length(text) - len(regexp_split_to_array(trim(text), '\s+')) + 1)
-                         / len(regexp_split_to_array(trim(text), '\s+')), 4) AS mean_word_len,
+                         / len(regexp_split_to_array(trim(text), '[\s\v]+')), 4) AS stopword_ratio,
+                   round((length(text) - len(regexp_split_to_array(trim(text), '[\s\v]+')) + 1)
+                         / len(regexp_split_to_array(trim(text), '[\s\v]+')), 4) AS mean_word_len,
                    round(length(regexp_replace(text, '[^A-Z]', '', 'g'))
                          / length(text), 4) AS upper_ratio
             FROM documents
@@ -2563,13 +2563,13 @@ def _oracle_sql_base() -> dict[str, str]:
             ), q AS (
               SELECT doc_id,
                      length(text) AS n_chars,
-                     len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
+                     len(regexp_split_to_array(trim(text), '[\s\v]+')) AS n_tokens,
                      round(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
                            / length(text), 4) AS punct_ratio,
                      round(len(regexp_extract_all(lower(text), '\b(the|and|of|a|to|in|is|it)\b'))
-                           / len(regexp_split_to_array(trim(text), '\s+')), 4) AS stopword_ratio,
-                     round((length(text) - len(regexp_split_to_array(trim(text), '\s+')) + 1)
-                           / len(regexp_split_to_array(trim(text), '\s+')), 4) AS mean_word_len,
+                           / len(regexp_split_to_array(trim(text), '[\s\v]+')), 4) AS stopword_ratio,
+                     round((length(text) - len(regexp_split_to_array(trim(text), '[\s\v]+')) + 1)
+                           / len(regexp_split_to_array(trim(text), '[\s\v]+')), 4) AS mean_word_len,
                      round(length(regexp_replace(text, '[^A-Z]', '', 'g'))
                            / length(text), 4) AS upper_ratio
               FROM d

@@ -17,25 +17,27 @@ must agree with this oracle exactly.
 from __future__ import annotations
 
 
-def build_edges(redirects, sameas, dbr: str = "http://dbpedia.org/resource/"):
-    """(src_id, dst_id) redirects + (wikidata_uri, dbpedia_uri) sameAs
-    -> directed parent dict {uri: parent_uri}.
+def min_parent(edges) -> dict:
+    """(uri, parent) pairs -> directed parent dict {uri: parent_uri}.
 
     A uri with several outgoing edges (dirty redirect dumps; sameAs snapshots
     with one wikidata entity mapped per language) keeps the MIN parent —
     order-independent, and the rule the Spark engine applies on both of its
-    paths (engine/canonicalize.py), so oracle and engine agree on duplicates."""
+    paths (engine/canonicalize.py), so oracle and engine agree on duplicates.
+    An edge with a NULL end is no edge, as in the engine's SQL joins."""
     parent: dict = {}
-
-    def put(u, p):
-        if u not in parent or p < parent[u]:
+    for u, p in edges:
+        if u is not None and p is not None and (u not in parent or p < parent[u]):
             parent[u] = p
-
-    for src, dst in redirects:
-        put(dbr + src, dbr + dst)
-    for wk, dbp in sameas:
-        put(wk, dbp)
     return parent
+
+
+def build_edges(redirects, sameas, dbr: str = "http://dbpedia.org/resource/"):
+    """(src_id, dst_id) redirects + (wikidata_uri, dbpedia_uri) sameAs
+    -> directed parent dict {uri: parent_uri} (``min_parent``)."""
+    prefixed = [(None if s is None else dbr + s, None if d is None else dbr + d)
+                for s, d in redirects]
+    return min_parent(prefixed + list(sameas))
 
 
 def canonical_map(parent: dict) -> dict:

@@ -9,9 +9,12 @@ pre-snapshotted tables:
     sameas(wikidata_uri, dbpedia_uri)            <- owl:sameAs snapshot
 
 Inside the mapInArrow extract kernel (engine/extract.py) the *decision*
-(does this mention link?) uses broadcast dicts; the Spark pipeline
-additionally re-resolves mentions through a real broadcast-hash join
-(engine/linking.py) so the scale path is a join, not a driver-side dict.
+(does this mention link?) uses a broadcast key set or Bloom bitmap.  The
+*resolution* follows the pipeline's regime (engine/linking.py): with
+snapshot-sized sides the DeferredLinker also carries them as dicts and the
+kernel resolves each mention itself; past the broadcast budget, or with a
+file-backed side, mentions are resolved by joins, so the scale path never
+ships a driver-side dict.
 """
 
 from __future__ import annotations
@@ -42,21 +45,28 @@ MENTION_SENTINEL = "urn:mention:"
 
 class DeferredLinker(Linker):
     """Linker used inside the Spark extract kernel: it *decides* link hits
-    from a broadcast membership set but defers URI resolution to the
-    pipeline's broadcast-hash join (engine/linking.py).
+    from a broadcast membership set but defers URI resolution past the
+    mapper cascade (engine/linking.py).
 
-    A hit returns the sentinel ``urn:mention:<lang>:<surface>``; the join stage
-    replaces it with coalesce(dbpedia_uri, wikidata_uri).  dbpedia() returns
-    None so the sentinel survives the mapper's sameAs step intact.
+    A hit returns the sentinel ``urn:mention:<lang>:<surface>``; the
+    resolution replaces it with coalesce(dbpedia_uri, wikidata_uri), in the
+    extract kernel itself when ``lookups`` is set, else in the join stage.
+    dbpedia() returns None so the sentinel survives the mapper's sameAs step
+    intact.
 
     Scale rationale: executors only need the *key set* of the mention index
-    (compact, broadcastable); the value-bearing index stays a distributed
-    table joined once, instead of a driver-shipped dict of every URI.
+    (compact, broadcastable); past the broadcast budget the value-bearing
+    index stays a distributed table joined once, instead of a driver-shipped
+    dict of every URI.
     """
 
-    def __init__(self, linkable_keys):
+    def __init__(self, linkable_keys, lookups=None):
         super().__init__()
         self.linkable = linkable_keys  # set of (lang, surface)
+        # driver-lookup regime: the snapshot sides as dicts
+        # (engine/linking.SnapshotLookups), applied by the extract kernel
+        # instead of the join stage
+        self.lookups = lookups
 
     def wikidata(self, surface: str, lang: str):
         if (lang, surface) in self.linkable:

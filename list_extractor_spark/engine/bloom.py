@@ -85,6 +85,8 @@ def build_bloom(keys: DataFrame, fpp: float = 1e-6) -> BloomSet:
     import numpy as np
     import pandas as pd
 
+    # a key with a NULL part is never probed (sentinel keys are strings)
+    keys = keys.select("lang", "surface").dropna()
     # sizing count: exact row count straight from the plan when the key set
     # collapsed to a LocalRelation (zero jobs — tiny driver jobs cost ~0.3 s
     # of scheduling latency each on a busy driver); a count job otherwise
@@ -109,7 +111,7 @@ def build_bloom(keys: DataFrame, fpp: float = 1e-6) -> BloomSet:
         import numpy as np
 
         bits = np.zeros(n_bytes, dtype=np.uint8)
-        rows = keys.select("lang", "surface").collect()
+        rows = keys.collect()
         if rows:
             ii = np.arange(k, dtype=np.uint64)
             digests = b"".join(
@@ -161,7 +163,7 @@ def build_bloom(keys: DataFrame, fpp: float = 1e-6) -> BloomSet:
                 acc |= np.frombuffer(bm, dtype=np.uint8)
         yield pd.DataFrame({"bm": [acc.tobytes()]})
 
-    bitmaps = keys.select("lang", "surface").mapInPandas(
+    bitmaps = keys.mapInPandas(
         partition_bitmap, schema="bm binary"
     )
     # Two-level OR-reduce: funneling one bitmap per input partition straight

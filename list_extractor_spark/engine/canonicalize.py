@@ -11,6 +11,9 @@ Scale: each round is one equi-join of the (uri, parent) set with itself —
 at 10^12 docs the edge set (redirect+sameAs dumps, ~10^8 rows) is orders
 smaller than the triple set, so the loop is cheap; only the final application
 join touches the triples, and it broadcasts when the map is small enough.
+With snapshot-sized sides Pipeline.run uses neither: its driver-lookup
+regime (engine/linking.driver_lookups) builds the map with core/canonical.py
+and the extract pass applies it.
 """
 
 from __future__ import annotations
@@ -50,17 +53,12 @@ def canonical_map_df(
     """
     n_edges = _estimate_edge_rows(edges)
     if n_edges <= driver_threshold:
-        from ..core.canonical import canonical_map
+        from ..core.canonical import canonical_map, min_parent
 
         # deterministic min-parent on duplicate-source edges: dirty redirect
         # dumps must resolve identically on both paths (the distributed path
-        # below dedupes the same way)
-        parent: dict = {}
-        for r in edges.collect():
-            u, p = r["uri"], r["parent"]
-            if u not in parent or p < parent[u]:
-                parent[u] = p
-        cmap = sorted(canonical_map(parent).items())
+        # below dedupes the same way, and its joins never match a NULL end)
+        cmap = sorted(canonical_map(min_parent(edges.collect())).items())
         # pandas-backed createDataFrame plans as a LocalRelation WITH size
         # statistics (a python list becomes a LogicalRDD whose stats are
         # unknown), so the downstream size-adaptive apply join decides from

@@ -18,9 +18,12 @@ standalone parse stage (``parse_items``) are other emitters over it:
   * rule tables ride along as broadcast variables captured in the closure;
   * entity-link *decisions* use a broadcast membership structure — an exact
     key set for small indexes, or the distributed-built Bloom bitmap
-    (engine/bloom.py) the pipeline defaults to — URI *resolution* is left
-    to the downstream broadcast-hash join (engine/linking.py): at full scale
-    only a fixed-size bitmap ships to executors, never the index rows.
+    (engine/bloom.py) the pipeline defaults to.  URI *resolution* follows
+    the pipeline's regime (engine/linking.py): with snapshot-sized sides the
+    linker also carries the redirect, index, sameAs and canonical dicts and
+    this pass emits linked rows (``_linked``); otherwise the sentinels are
+    left to the downstream joins, and at full scale only a fixed-size bitmap
+    ships to executors, never the index rows.
 
 Scale note: mega "List of ..." pages make single heavy rows.  The stage
 optionally pre-distributes by span count (repartitionByRange on the spans'
@@ -53,8 +56,31 @@ def _sentinel_parts(subj: str):
     hit = split_sentinel(subj)
     if hit is None:
         return None, None, None
-    ll, ls = hit
-    return ll, ls, _mint(list_elem_clean(ls), dbr_ns(ll))
+    return (*hit, _fallback(*hit))
+
+
+def _fallback(ll: str, ls: str) -> str:
+    return _mint(list_elem_clean(ls), dbr_ns(ll))
+
+
+def _link_subjects(lookups, subj: str) -> list:
+    """One candidate subject through the driver-regime lookups: one entry
+    per row the link join and sameAs join would give it, each
+    coalesce(dbpedia_uri, wikidata_uri, link_fallback, subj), then the
+    canonical map (engine/linking.resolve_links + apply_canonical_df)."""
+    hit = split_sentinel(subj)
+    if hit is None:
+        out = [subj]
+    else:
+        out = []
+        # a missing key, or a rank-1 row whose URI is NULL, takes the fallback
+        for wk in lookups.mentions.get(hit, (None,)):
+            if wk is None:
+                out.append(_fallback(*hit))
+            else:
+                out.extend(wk if db is None else db for db in lookups.sameas.get(wk, (None,)))
+    canon = lookups.canonical
+    return [canon.get(s, s) for s in out]
 
 
 def _map_documents(documents: DataFrame, cols, schema, emit, linker=None) -> DataFrame:
@@ -98,6 +124,24 @@ def _candidates(linker, doc_id, lang, res_classes, res_target, spans):
     return [(doc_id, s, p, o, dt, *_sentinel_parts(s)) for s, p, o, dt in triples]
 
 
+def _linked(linker, doc_id, lang, res_classes, spans):
+    """_candidates in the driver-lookup regime: the document is extracted
+    once per redirect target, and each row comes out linked and
+    canonicalized (IRI objects only), with NULL link columns."""
+    lk = linker.lookups
+    canon = lk.canonical
+    rows = []
+    for target in lk.redirects.get(doc_id, (doc_id,)):
+        triples, _ = extract_document(target, res_classes, lang, spans, linker)
+        for s, p, o, dt in triples:
+            if dt is None:
+                o = canon.get(o, o)
+            rows.extend(
+                (doc_id, subj, p, o, dt, None, None, None) for subj in _link_subjects(lk, s)
+            )
+    return rows
+
+
 def _metrics(linker, doc_id, lang, res_classes, spans):
     triples, stats = extract_document(doc_id, res_classes, lang, spans, linker)
     return [(doc_id, *stats, len(triples))]
@@ -115,7 +159,7 @@ def _items(_linker, doc_id, lang, res_class, spans):
     return rows
 
 
-def extract_candidates(documents: DataFrame, linkable_keys=None) -> DataFrame:
+def extract_candidates(documents: DataFrame, linkable_keys=None, lookups=None) -> DataFrame:
     """documents(doc_id, lang, res_class, spans[, res_target, res_classes])
     -> candidates (CANDIDATES_SCHEMA).
 
@@ -123,11 +167,20 @@ def extract_candidates(documents: DataFrame, linkable_keys=None) -> DataFrame:
     resolution is deferred to the join stage via sentinels.
     ``res_target``: optional redirect-resolved page id (defaults to doc_id).
     ``res_classes``: optional class list overriding ``[res_class]``.
+    ``lookups``: the driver-lookup regime's ``linking.SnapshotLookups``.
+    With it the redirects come from ``doc_id`` and the rows come out linked
+    (and canonicalized when the lookups carry a canonical map), so no join
+    stage follows.
     """
-    linker = DeferredLinker(linkable_keys if linkable_keys is not None else set())
+    keys = linkable_keys if linkable_keys is not None else set()
+    if lookups is not None:
+        return _map_documents(
+            documents, ("doc_id", "lang", "res_classes"),
+            CANDIDATES_SCHEMA, _linked, DeferredLinker(keys, lookups),
+        )
     return _map_documents(
         documents, ("doc_id", "lang", "res_classes", "res_target"),
-        CANDIDATES_SCHEMA, _candidates, linker,
+        CANDIDATES_SCHEMA, _candidates, DeferredLinker(keys),
     )
 
 

@@ -1,12 +1,24 @@
-"""Linking join stage (L1-L3): resolve deferred mention sentinels.
+"""Linking stage (L1-L3): resolve deferred mention sentinels.
 
 Replaces the reference's two HTTP round-trips per element
 (wikidataAPI_call mapper.py:1547-1577; find_DBpedia_uri mapper.py:1580-1602)
-with one hash join against the snapshotted mention index followed by one
-against the sameAs snapshot (each broadcast while it fits the threshold,
-shuffled past it — see _auto_salt / engine/stats.fits_broadcast):
+with lookups against the snapshotted mention index and the sameAs snapshot:
 
-    subj = coalesce(sameas.dbpedia_uri, mention_index.wikidata_uri)
+    subj = coalesce(sameas.dbpedia_uri, mention_index.wikidata_uri,
+                    link_fallback, subj)
+
+Two regimes, picked per build from plan statistics (Pipeline.run):
+
+* driver lookups (``driver_lookups``) — when the redirects, the rank-1 index
+  and sameAs are LocalRelations within the broadcast threshold, the driver
+  turns them into dicts (``SnapshotLookups``) that the extract kernel
+  probes per row (engine/extract.py), with the same left-join fan-out and
+  NULL semantics; no join runs.  Each dict is bounded by the broadcast
+  budget of the side it replaces.
+* joins (``resolve_links``, ``resolve_redirects``) — one hash join against
+  the index followed by one against sameAs, each broadcast while it fits
+  the threshold and shuffled past it (see _auto_salt /
+  engine/stats.fits_broadcast).
 
 Skew: hub mentions ("List of ..." pages link the same few entities millions of
 times) make hot join keys.  With a broadcast build side there is no shuffle so
@@ -21,12 +33,69 @@ broadcasts an index that outgrew its snapshot.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, functions as F
 
 # salt width for the auto-selected shuffled path: wide enough to split a hub
 # key across a whole executor wave, small enough that exploding the build side
 # K ways stays cheap relative to the probe
 AUTO_SALT = 8
+
+
+class SnapshotLookups(NamedTuple):
+    """The join chain's snapshot sides as driver-built dicts (the
+    driver-lookup regime, ``driver_lookups``).  A value list holds one entry
+    per matching snapshot row, so a duplicate key fans out as the left join
+    does; NULL keys are left out, as a join never matches them."""
+
+    redirects: dict  # src -> [coalesce(dst, src), ...]
+    mentions: dict  # (lang, surface) -> [wikidata_uri, ...] of rank-1 rows
+    sameas: dict  # wikidata_uri -> [dbpedia_uri, ...]
+    canonical: dict  # uri -> canonical uri; empty without canonicalization
+
+
+def _multimap(pairs) -> dict:
+    out: dict = {}
+    for k, v in pairs:
+        out.setdefault(k, []).append(v)
+    return out
+
+
+def driver_lookups(
+    mention_index: DataFrame,
+    sameas: DataFrame,
+    redirects: DataFrame,
+    canonicalize: bool,
+) -> SnapshotLookups | None:
+    """The driver-lookup regime's dicts, or None for the join chain.
+
+    It applies when the redirects, the rank-1 mention index and sameAs each
+    plan as a LocalRelation (their rows already live in the driver, so the
+    collects below run no job) and each fits the broadcast budget: every
+    dict is then bounded by the same budget as the broadcast side it
+    replaces, and the canonical map, derived from redirects and sameAs, by
+    theirs.  A file-backed side or a disabled broadcast
+    (``spark.sql.autoBroadcastJoinThreshold <= 0``) keeps the joins."""
+    from ..core.canonical import build_edges, canonical_map
+    from .stats import fits_broadcast, local_relation_rows
+
+    idx = mention_index.filter(F.col("rank") == 1).select("lang", "surface", "wikidata_uri")
+    sides = (redirects.select("src", "dst"), idx, sameas.select("wikidata_uri", "dbpedia_uri"))
+    if not all(local_relation_rows(s) is not None and fits_broadcast(s) for s in sides):
+        return None
+    rd, mi, sa = (s.collect() for s in sides)
+    return SnapshotLookups(
+        redirects=_multimap(
+            (src, src if dst is None else dst) for src, dst in rd if src is not None
+        ),
+        mentions=_multimap(
+            ((lang, surface), wk) for lang, surface, wk in mi
+            if lang is not None and surface is not None
+        ),
+        sameas=_multimap((wk, db) for wk, db in sa if wk is not None),
+        canonical=canonical_map(build_edges(rd, sa)) if canonicalize else {},
+    )
 
 
 def _auto_salt(idx: DataFrame) -> int:

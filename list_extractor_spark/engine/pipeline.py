@@ -10,15 +10,30 @@ set (property-tested).  A ``_lineage`` table records per-stage row counts and
 wall time — the scalable version of the reference's evaluation.csv
 (utilities.py:319-346).
 
-Shuffle budget at scale: ① and ③ are broadcast joins while their snapshot
-sides fit spark.sql.autoBroadcastJoinThreshold and degrade to shuffle joins
-past it (every snapshot join — redirects, page_types, mention index, sameAs,
-canonical map — is size-gated via engine/stats.fits_broadcast, so a
-10^7-10^8-row dump never forces a multi-GB driver broadcast; AQE splits
-runtime skew on the demoted joins), ② is narrow, ④ touches only the small
-identity-edge set plus one size-gated map application, ⑤ is the single
-unavoidable shuffle (global (s,p,o,dt) dedup, the reference's rdflib set
-semantics).
+Shuffle budget: ⑤ is the single unavoidable shuffle (global (s,p,o,dt)
+dedup, the reference's rdflib set semantics) and ② is narrow.  ①, ③ and ④
+take one of two regimes per build, read from plan statistics alone
+(engine/linking.driver_lookups):
+
+* driver lookups — the redirects, the rank-1 mention index and sameAs each
+  plan as a LocalRelation within spark.sql.autoBroadcastJoinThreshold
+  (tests, the benchmark, per-page and per-class runs).  Their rows already
+  live in the driver; they become dicts carried by the broadcast linker, and
+  the extract pass applies them with the canonical map, so ①, ③ and ④ leave
+  the plan: a lazy build is one mapInArrow pass, the dedup shuffle and the
+  write (2 Spark jobs).  Each dict is bounded by the same broadcast budget
+  as the join side it replaces.  The ``candidates`` stage then already
+  holds linked, canonicalized rows and no ``linked`` stage is written; the
+  join chain is a no-op on such rows (the canonical map is idempotent), so
+  a run_dir resumes under either regime.
+* joins — any file-backed side, or broadcast disabled.  ① and ③ are
+  broadcast joins while their snapshot sides fit the threshold and degrade
+  to shuffle joins past it (every snapshot join — redirects, page_types,
+  mention index, sameAs, canonical map — is size-gated via
+  engine/stats.fits_broadcast, so a 10^7-10^8-row dump never forces a
+  multi-GB driver broadcast; AQE splits runtime skew on the demoted joins),
+  and ④ touches only the small identity-edge set plus one size-gated map
+  application.
 """
 
 from __future__ import annotations
@@ -32,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .bloom import build_bloom
 from .canonicalize import apply_canonical_df, canonical_map_df, identity_edges
 from .extract import extract_candidates
-from .linking import attach_page_types, resolve_links, resolve_redirects
+from .linking import attach_page_types, driver_lookups, resolve_links, resolve_redirects
 from .schemas import (
     MENTION_INDEX_SCHEMA,
     PAGE_TYPES_SCHEMA,
@@ -42,15 +57,21 @@ from .schemas import (
 
 
 def _local_df(spark: SparkSession, rows, schema):
-    """createDataFrame via a pandas frame: Spark plans it as a LocalRelation
-    WITH size statistics (a python list becomes a LogicalRDD whose stats are
-    Long.MaxValue), so downstream size-adaptive decisions (link-join regime,
-    canonicalization path) read Catalyst stats instead of running count jobs
-    — each skipped tiny job saves ~0.3-0.5 s of driver scheduling latency."""
-    import pandas as pd
+    """createDataFrame via an Arrow table: Spark plans it as a LocalRelation
+    WITH size statistics, empty or not (a python list, or an empty pandas
+    frame, becomes a LogicalRDD whose stats are Long.MaxValue), so
+    downstream size-adaptive decisions (the driver-lookup regime, link-join
+    regime, canonicalization path) read Catalyst stats instead of running
+    count jobs — each skipped tiny job saves ~0.3-0.5 s of driver scheduling
+    latency."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    pdf = pd.DataFrame(list(rows), columns=[f.name for f in schema.fields])
-    return spark.createDataFrame(pdf, schema=schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(columns, arrow_schema)],
+                     schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)
 
 
 def snapshots_to_dfs(spark: SparkSession, snapshots: dict):
@@ -123,31 +144,36 @@ class Pipeline:
             # surfaces — is the one thing in this path that cannot scale)
             linkable_keys = build_bloom(mention_index.select("lang", "surface"))
 
+        lookups = None
         if self._is_done("candidates"):
             candidates = self.spark.read.parquet(self._stage_path("candidates"))
             self._lineage.append({"stage": "candidates", "rows": candidates.count(),
                                   "sec": 0.0, "reused": True})
         else:
-            docs = resolve_redirects(documents, redirects)
+            lookups = driver_lookups(mention_index, sameas, redirects, canonicalize)
+            docs = documents if lookups is not None else resolve_redirects(documents, redirects)
             if page_types is not None:
                 docs = attach_page_types(docs, page_types)
             candidates = self._checkpoint(
-                extract_candidates(docs, linkable_keys=linkable_keys),
+                extract_candidates(docs, linkable_keys=linkable_keys, lookups=lookups),
                 "candidates",
             )
 
-        if self._is_done("linked"):
-            linked = self.spark.read.parquet(self._stage_path("linked"))
-            self._lineage.append({"stage": "linked", "rows": linked.count(),
-                                  "sec": 0.0, "reused": True})
+        if lookups is not None:
+            # the extract pass already linked and canonicalized every row
+            linked = candidates
         else:
-            linked = self._checkpoint(
-                resolve_links(candidates, mention_index, sameas), "linked"
-            )
-
-        if canonicalize:
-            cmap = canonical_map_df(identity_edges(redirects, sameas))
-            linked = apply_canonical_df(linked, cmap)
+            if self._is_done("linked"):
+                linked = self.spark.read.parquet(self._stage_path("linked"))
+                self._lineage.append({"stage": "linked", "rows": linked.count(),
+                                      "sec": 0.0, "reused": True})
+            else:
+                linked = self._checkpoint(
+                    resolve_links(candidates, mention_index, sameas), "linked"
+                )
+            if canonicalize:
+                cmap = canonical_map_df(identity_edges(redirects, sameas))
+                linked = apply_canonical_df(linked, cmap)
 
         # project BEFORE the dedup shuffle: doc_id must not ride through the
         # exchange (the only wide stage in the pipeline)

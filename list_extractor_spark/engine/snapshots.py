@@ -192,7 +192,16 @@ def write_graph_snapshot(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown mode {mode!r}")
     out = triples.withColumn("pred_bucket", F.pmod(F.hash("pred"), F.lit(N_BUCKETS)))
-    files = _write_data_files(out, path)
+    # the write's jobs (with a lazy pipeline upstream, every job of the
+    # build) read as this stage in the status store; the caller's job group
+    # and description are left as they were
+    sc = triples.sparkSession.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"snapshots.commit {path}")
+    try:
+        files = _write_data_files(out, path)
+    finally:
+        sc.setLocalProperty("spark.job.description", previous)
     # the schema as a parquet read returns it: every field nullable
     schema = StructType(
         [StructField(f.name, f.dataType, True, f.metadata) for f in triples.schema]

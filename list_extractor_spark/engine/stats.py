@@ -33,10 +33,27 @@ def _optimized_plan(df: DataFrame):
 
 def local_relation_rows(df: DataFrame) -> int | None:
     """Exact row count straight from the plan when it collapsed to a
-    LocalRelation, else None.  Zero jobs either way."""
-    plan = _optimized_plan(df)
-    if plan.getClass().getSimpleName() == "LocalRelation":
+    LocalRelation, or to a Union / Project tree whose every leaf is one
+    (``identity_edges`` optimizes to a Union of two), else None.  Zero jobs
+    either way."""
+    return _local_rows(_optimized_plan(df))
+
+
+def _local_rows(plan) -> int | None:
+    kind = plan.getClass().getSimpleName()
+    if kind == "LocalRelation":
         return plan.data().size()
+    if kind == "Project":  # row-preserving
+        return _local_rows(plan.child())
+    if kind == "Union":  # UNION ALL: the children's rows add up
+        children = plan.children()
+        total = 0
+        for i in range(children.size()):
+            n = _local_rows(children.apply(i))
+            if n is None:
+                return None
+            total += n
+        return total
     return None
 
 

@@ -6,8 +6,8 @@ views, same canon / normalize).  Every Arrow kernel behind these queries
 (shingle_hash_stats, minhash_doc_stats, winnow_posting, the DSIR fit and
 score passes, the media feature / resize / frame passes) and the JVM line
 and quality filters must equal the oracle on NULL, empty and
-whitespace-only text, non-BMP and combining Unicode, boilerplate and
-whitespace-tail lines, and one large document."""
+whitespace-only text, a vertical tab between words, non-BMP and combining
+Unicode, boilerplate and whitespace-tail lines, and one large document."""
 
 import importlib.util
 import os
@@ -74,6 +74,9 @@ def _hostile_rows(vocab):
         (900010, "spaces before the end.   \nand tabs after the stop.\t\t"),
         (900011, large),
         (900014, None),  # a NULL video row (doc_id % 3 == 2) for media_frames
+        # 900009 with a vertical tab for one space: Java's \s splits on it,
+        # so this is 900009's token sequence; RE2's \s does not
+        (900015, "one two\x0bthree four five.\n\n  trailing ws line here ok.  "),
     ]
 
 

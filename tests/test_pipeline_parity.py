@@ -10,6 +10,7 @@ import pytest
 
 from list_extractor_spark.core.parser import parse_spans
 from list_extractor_spark.engine.extract import parse_items
+from list_extractor_spark.engine.linking import driver_lookups
 from list_extractor_spark.engine.pipeline import Pipeline, run_pipeline, snapshots_to_dfs
 from list_extractor_spark.engine.schemas import DOCUMENTS_SCHEMA
 from list_extractor_spark.fixtures import corpus_to_rows, make_corpus, make_snapshots
@@ -244,6 +245,183 @@ def test_resume_reproduces_identical_triples(spark, corpus, snapshots, documents
     )
     assert resumed == first
     assert any(s["stage"] == "candidates" and s["reused"] for s in pipe.lineage)
+
+
+def test_resume_across_regimes(spark, corpus, snapshots, documents_df, tmp_path):
+    """A run_dir written in the driver-lookup regime (whose candidates are
+    already linked and canonicalized) resumes under the join chain
+    (broadcast disabled) to the identical triple set."""
+    run_dir = str(tmp_path / "run")
+    mention_index, sameas, redirects = snapshots_to_dfs(spark, snapshots)
+    assert driver_lookups(mention_index, sameas, redirects, True) is not None
+    first = _collect_triples(run_pipeline(spark, documents_df, snapshots, run_dir=run_dir))
+    shutil.rmtree(f"{run_dir}/triples")
+    empty_docs = spark.createDataFrame([], schema=DOCUMENTS_SCHEMA)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert driver_lookups(mention_index, sameas, redirects, True) is None
+        pipe = Pipeline(spark, run_dir=run_dir)
+        resumed = _collect_triples(
+            pipe.run(empty_docs, mention_index, sameas, redirects, linkable_keys=set())
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert resumed == first
+    assert any(s["stage"] == "candidates" and s["reused"] for s in pipe.lineage)
+
+
+def test_warm_small_snapshot_build_runs_two_jobs(spark, snapshots, documents_df, tmp_path):
+    """With snapshot-sized sides, a build is one extract pass, the dedup
+    shuffle and the write: 2 Spark jobs, both described as the commit, with
+    the caller's job description back in place afterwards."""
+    import uuid
+
+    from list_extractor_spark.engine.snapshots import write_graph_snapshot
+
+    sc = spark.sparkContext
+    sides = snapshots_to_dfs(spark, snapshots)
+    table = str(tmp_path / "graph")
+
+    def build():
+        triples = Pipeline(spark).run(documents_df, *sides, canonicalize=True)
+        return write_graph_snapshot(triples, table, mode="overwrite")
+
+    build()  # warm-up
+    group = f"two-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+        after = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(jobs) == 2, jobs
+    store = sc._jsc.sc().statusStore()
+    descriptions = {store.job(j).description().getOrElse(None) for j in jobs}
+    assert descriptions == {f"snapshots.commit {table}"}
+    assert after == group
+
+
+def _nullable_frame(spark, rows, schema):
+    """A pandas-backed (LocalRelation) snapshot frame whose columns may hold
+    NULL, as a hostile snapshot file would."""
+    from pyspark.sql import types as T
+
+    from list_extractor_spark.engine.pipeline import _local_df
+
+    fields = [T.StructField(f.name, f.dataType, True) for f in schema.fields]
+    return _local_df(spark, rows, T.StructType(fields))
+
+
+def _regime_case(case):
+    """(docs, snapshots, URIs the output must contain, whether
+    oracle_triples defines the answer) for one hostile-snapshot case."""
+    import re
+
+    from list_extractor_spark.engine.extract import _fallback
+
+    wd, dbr = "http://www.wikidata.org/entity/", "http://dbpedia.org/resource/"
+    names = ("doc_id", "lang", "res_class", "spans")
+    docs = [dict(zip(names, row)) for row in corpus_to_rows(make_corpus(14, hub_every=0))]
+    snaps = make_snapshots()
+    mi, sa, rd = list(snaps["mention_index"]), list(snaps["sameas"]), list(snaps["redirects"])
+    text = " ".join(t for d in docs for _, t, _, _ in d["spans"])
+    used = sorted(set(re.findall(r"\{\{Ref [^}]*\}\}", text)))
+    indexed = {s: w for _, s, w, _ in mi}
+    hit = [s for s in used if s in indexed]
+    miss = [s for s in used if s not in indexed]
+    linked_sa = dict(sa)
+    unlinked = [s for s in hit if indexed[s] not in linked_sa]  # no sameAs row
+    must, oracle = set(), False
+    if case == "dup_rank1":
+        mi += [("en", s, f"{wd}Q9{i}", 1) for i, s in enumerate(hit)]
+        sa.append((f"{wd}Q90", dbr + "Second_Zero"))
+        w = indexed[hit[1]]
+        must = {f"{wd}Q91", dbr + "Second_Zero", linked_sa.get(w, w)}
+    elif case == "rank2_only":
+        mi += [("en", s, f"{wd}Q8{i}", 2) for i, s in enumerate(miss)]
+        must = {_fallback("en", miss[0])}
+    elif case == "dup_sameas":
+        sa += [(w, d + "_Alt") for w, d in snaps["sameas"]]
+        must = {d + suffix for w, d in snaps["sameas"] if w in {indexed[s] for s in hit}
+                for suffix in ("", "_Alt")}
+    elif case == "two_redirects":
+        rd += [("Writer_0", "Alias_A"), ("Writer_0", "Alias_B")]
+        must = {dbr + "Alias_A", dbr + "Alias_B"}
+    elif case == "redirect_cycle":
+        rd += [("Writer_0", "Band_1"), ("Band_1", "Writer_0")]
+        must, oracle = {dbr + "Band_1"}, True
+    elif case == "redirect_sameas_chain":
+        w = next(indexed[s] for s in hit if indexed[s] in linked_sa)
+        d = linked_sa[w]
+        rd.append((d[len(dbr):], "Chain_End"))
+        must, oracle = {dbr + "Chain_End"}, True
+    elif case == "null_keys":
+        mi += [("en", None, f"{wd}Q70", 1), ("en", unlinked[0], None, 1),
+               (None, hit[1], f"{wd}Q71", 1)]
+        sa += [(None, dbr + "Null_Entity"), (indexed[hit[2]], None)]
+        rd += [(None, "Writer_0"), ("Band_1", None)]
+        w = indexed[unlinked[0]]
+        must = {indexed[hit[2]], w, _fallback("en", unlinked[0])}
+    elif case == "all_empty":
+        mi, sa, rd, oracle = [], [], [], True
+    elif case == "non_bmp":
+        docs = _hostile_docs("unicode")
+        surface = "{{Ref \U0001F600 \u00e9\u0301}}"  # a subject mention
+        for d in docs:
+            d["spans"] = [(k, t.replace("{{Ref \u00e9\u0301}}", surface), m, o)
+                          for k, t, m, o in d["spans"]]
+        mi.append(("en", surface, f"{wd}Q\U0001F600", 1))
+        sa.append((f"{wd}Q\U0001F600", dbr + "\U0001D11E_\u00e9\u0301"))
+        rd.append(("Writer_\U0001F600\u0301", "Writer_\U00020BB7"))
+        must, oracle = {dbr + "\U0001D11E_\u00e9\u0301", dbr + "Writer_\U00020BB7"}, True
+    return docs, {"mention_index": mi, "sameas": sa, "redirects": rd}, must, oracle
+
+
+REGIME_CASES = [
+    "dup_rank1", "rank2_only", "dup_sameas", "two_redirects", "redirect_cycle",
+    "redirect_sameas_chain", "null_keys", "all_empty", "non_bmp",
+]
+
+
+@pytest.mark.parametrize("case", REGIME_CASES)
+def test_driver_regime_matches_join_chain(spark, case):
+    """Pipeline.run's driver-lookup regime (snapshot-sized sides resolved in
+    the extract pass) gives the join chain's triples on hostile snapshots:
+    fan-out on duplicate keys, fallback mints, NULL keys, cycles and chains
+    through the canonical map, empty sides and non-BMP keys."""
+    from list_extractor_spark.engine.schemas import (
+        MENTION_INDEX_SCHEMA,
+        REDIRECTS_SCHEMA,
+        SAMEAS_SCHEMA,
+    )
+
+    docs, snaps, must, oracle = _regime_case(case)
+    df = _hostile_df(spark, docs)
+    sides = (
+        _nullable_frame(spark, snaps["mention_index"], MENTION_INDEX_SCHEMA),
+        _nullable_frame(spark, snaps["sameas"], SAMEAS_SCHEMA),
+        _nullable_frame(spark, snaps["redirects"], REDIRECTS_SCHEMA),
+    )
+    assert driver_lookups(*sides, True) is not None
+    fast = _collect_triples(Pipeline(spark).run(df, *sides))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert driver_lookups(*sides, True) is None
+        joined = _collect_triples(Pipeline(spark).run(df, *sides))
+    finally:
+        spark.conf.set(key, old)
+    assert fast == joined, (sorted(fast - joined)[:3], sorted(joined - fast)[:3])
+    seen = {t[0] for t in fast} | {t[2] for t in fast}
+    assert must <= seen, sorted(must - seen)
+    if oracle:
+        assert fast == oracle_triples(docs, snaps)
 
 
 def _hostile_docs(case):

@@ -435,6 +435,42 @@ def test_fits_broadcast_probe_envelope(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_local_relation_rows_sums_union_and_project_trees(spark, tmp_path):
+    """local_relation_rows counts Union / Project trees whose every leaf is
+    a LocalRelation exactly, and is None as soon as one leaf is file-backed,
+    so the canonical-map sizing of identity_edges runs no Spark job."""
+    import uuid
+
+    from list_extractor_spark.engine.canonicalize import _estimate_edge_rows, identity_edges
+    from list_extractor_spark.engine.stats import _optimized_plan, local_relation_rows
+
+    snaps = make_snapshots()
+    _, sa, rd = snapshots_to_dfs(spark, snaps)
+    n = len(snaps["redirects"]) + len(snaps["sameas"])
+    edges = identity_edges(rd, sa)
+    assert _optimized_plan(edges).getClass().getSimpleName() == "Union"
+    assert local_relation_rows(edges) == n
+    # a nondeterministic projection stays above the Union
+    projected = edges.select("uri", F.rand(1).alias("r"))
+    assert _optimized_plan(projected).getClass().getSimpleName() == "Project"
+    assert local_relation_rows(projected) == n
+    path = str(tmp_path / "edges")
+    edges.write.parquet(path)
+    assert local_relation_rows(edges.unionByName(spark.read.parquet(path))) is None
+    assert local_relation_rows(edges.distinct()) is None
+
+    sc = spark.sparkContext
+    group = f"edge-sizing-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        assert _estimate_edge_rows(edges) == n
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_near_dup_resolve_evaluates_upstream_pairs_once(spark):
     """The distributed CC loop must NOT re-run the (usually expensive)
     upstream pair pipeline per round: an accumulator-counting UDF upstream
