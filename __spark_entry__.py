@@ -1317,8 +1317,10 @@ def _stream_kg_versioned(spark, sf_dir):
 
 def _stream_kg_canonical(spark, sf_dir):
     """Streaming extract+link with the STATIC canonical snapshot applied
-    in-stream (broadcast per micro-batch — the slowly-updating-dimension
-    pattern); global dedup remains a batch post-pass by design."""
+    in-stream (in the extract pass while the map is a LocalRelation within
+    the broadcast budget, else a join per micro-batch — the
+    slowly-updating-dimension pattern); global dedup remains a batch
+    post-pass by design."""
     import tempfile
 
     from list_extractor_spark.engine.canonicalize import canonical_map_df, identity_edges

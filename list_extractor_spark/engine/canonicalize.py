@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .schemas import local_df
+
 
 def canonical_map_df(
     edges: DataFrame, max_iters: int = 12, driver_threshold: int = 100_000
@@ -59,16 +61,7 @@ def canonical_map_df(
         # dumps must resolve identically on both paths (the distributed path
         # below dedupes the same way, and its joins never match a NULL end)
         cmap = sorted(canonical_map(min_parent(edges.collect())).items())
-        # pandas-backed createDataFrame plans as a LocalRelation WITH size
-        # statistics (a python list becomes a LogicalRDD whose stats are
-        # unknown), so the downstream size-adaptive apply join decides from
-        # Catalyst stats instead of running a count job per pipeline run
-        import pandas as pd
-
-        pdf = pd.DataFrame(cmap, columns=["uri", "canonical"])
-        return edges.sparkSession.createDataFrame(
-            pdf, schema="uri string, canonical string"
-        )
+        return local_df(edges.sparkSession, cmap, "uri string, canonical string")
     # dedupe duplicate-source edges (min parent) BEFORE iterating: without it
     # a uri with two parents fans out into two pointer rows that never merge,
     # and the fast path above would disagree

@@ -19,7 +19,7 @@ standalone parse stage (``parse_items``) are other emitters over it:
   * entity-link *decisions* use a broadcast membership structure — an exact
     key set for small indexes, or the distributed-built Bloom bitmap
     (engine/bloom.py) the pipeline defaults to.  URI *resolution* follows
-    the pipeline's regime (engine/linking.py): with snapshot-sized sides the
+    the regime of engine/linking.link_documents: with snapshot-sized sides the
     linker also carries the redirect, index, sameAs and canonical dicts and
     this pass emits linked rows (``_linked``); otherwise the sentinels are
     left to the downstream joins, and at full scale only a fixed-size bitmap

@@ -7,28 +7,20 @@ with lookups against the snapshotted mention index and the sameAs snapshot:
     subj = coalesce(sameas.dbpedia_uri, mention_index.wikidata_uri,
                     link_fallback, subj)
 
-Two regimes, picked per build from plan statistics (Pipeline.run):
+``link_documents`` is that step for Pipeline.run and both stream sinks
+(streaming/stream_extract.py), in one of two regimes read from plan
+statistics alone (``driver_lookups``): snapshot-sized sides become dicts
+(``SnapshotLookups``) that the extract kernel probes per row
+(engine/extract.py) with the joins' fan-out and NULL semantics, or the
+join chain runs (``resolve_redirects``, ``resolve_links``,
+canonicalize.apply_canonical_df), each join broadcast while its side fits
+the threshold and shuffled past it (_auto_salt / stats.fits_broadcast).
 
-* driver lookups (``driver_lookups``) — when the redirects, the rank-1 index
-  and sameAs are LocalRelations within the broadcast threshold, the driver
-  turns them into dicts (``SnapshotLookups``) that the extract kernel
-  probes per row (engine/extract.py), with the same left-join fan-out and
-  NULL semantics; no join runs.  Each dict is bounded by the broadcast
-  budget of the side it replaces.
-* joins (``resolve_links``, ``resolve_redirects``) — one hash join against
-  the index followed by one against sameAs, each broadcast while it fits
-  the threshold and shuffled past it (see _auto_salt /
-  engine/stats.fits_broadcast).
-
-Skew: hub mentions ("List of ..." pages link the same few entities millions of
-times) make hot join keys.  With a broadcast build side there is no shuffle so
-key skew costs nothing; the salted path is the shuffled regime for when the
-index outgrows the broadcast threshold: the probe side gets a deterministic
-salt column, the build side is exploded AUTO_SALT ways, and AQE skew-join
-splitting handles the residue.  The regime follows the SIZE of the rank-1
-index against spark.sql.autoBroadcastJoinThreshold (_auto_salt), the same
-adaptive pattern as canonicalize.canonical_map_df — nothing silently
-broadcasts an index that outgrew its snapshot.
+Skew: hub mentions ("List of ..." pages link the same few entities millions
+of times) make hot join keys.  A broadcast build side has no shuffle, so
+skew costs nothing; once the rank-1 index outgrows the threshold
+(_auto_salt) the probe side gets a deterministic salt, the build side is
+exploded AUTO_SALT ways and AQE skew-join splitting handles the residue.
 """
 
 from __future__ import annotations
@@ -65,26 +57,43 @@ def _multimap(pairs) -> dict:
 def driver_lookups(
     mention_index: DataFrame,
     sameas: DataFrame,
-    redirects: DataFrame,
-    canonicalize: bool,
+    redirects: DataFrame | None = None,
+    canonical: bool | DataFrame | None = None,
 ) -> SnapshotLookups | None:
     """The driver-lookup regime's dicts, or None for the join chain.
 
-    It applies when the redirects, the rank-1 mention index and sameAs each
-    plan as a LocalRelation (their rows already live in the driver, so the
-    collects below run no job) and each fits the broadcast budget: every
-    dict is then bounded by the same budget as the broadcast side it
-    replaces, and the canonical map, derived from redirects and sameAs, by
-    theirs.  A file-backed side or a disabled broadcast
-    (``spark.sql.autoBroadcastJoinThreshold <= 0``) keeps the joins."""
+    ``redirects`` None resolves none.  ``canonical`` True derives the
+    canonical map from the redirects and sameAs; a (uri, canonical) frame is
+    a caller's map, where as in the join a NULL ``uri`` never matches and a
+    NULL ``canonical`` keeps the IRI.
+
+    It applies when every side plans as a LocalRelation (its rows already
+    live in the driver, so the collects below run no job) and fits the
+    broadcast budget, which then bounds each dict.  A file-backed side, a
+    disabled broadcast (``spark.sql.autoBroadcastJoinThreshold <= 0``) or a
+    caller's map with a duplicate ``uri`` (the join fans its rows out)
+    keeps the joins."""
     from ..core.canonical import build_edges, canonical_map
     from .stats import fits_broadcast, local_relation_rows
 
     idx = mention_index.filter(F.col("rank") == 1).select("lang", "surface", "wikidata_uri")
-    sides = (redirects.select("src", "dst"), idx, sameas.select("wikidata_uri", "dbpedia_uri"))
+    sides = [idx, sameas.select("wikidata_uri", "dbpedia_uri")]
+    if redirects is not None:
+        sides.append(redirects.select("src", "dst"))
+    caller_map = isinstance(canonical, DataFrame)
+    if caller_map:
+        sides.append(canonical.select("uri", "canonical"))
     if not all(local_relation_rows(s) is not None and fits_broadcast(s) for s in sides):
         return None
-    rd, mi, sa = (s.collect() for s in sides)
+    mi, sa, *rest = (s.collect() for s in sides)
+    rd = rest[0] if redirects is not None else []
+    if caller_map:
+        cm = [(u, c) for u, c in rest[-1] if u is not None]
+        if len({u for u, _ in cm}) < len(cm):
+            return None
+        cmap = {u: c for u, c in cm if c is not None}
+    else:
+        cmap = canonical_map(build_edges(rd, sa)) if canonical else {}
     return SnapshotLookups(
         redirects=_multimap(
             (src, src if dst is None else dst) for src, dst in rd if src is not None
@@ -94,8 +103,50 @@ def driver_lookups(
             if lang is not None and surface is not None
         ),
         sameas=_multimap((wk, db) for wk, db in sa if wk is not None),
-        canonical=canonical_map(build_edges(rd, sa)) if canonicalize else {},
+        canonical=cmap,
     )
+
+
+def link_documents(
+    documents: DataFrame,
+    mention_index: DataFrame,
+    sameas: DataFrame,
+    linkable_keys,
+    redirects: DataFrame | None = None,
+    canonical: bool | DataFrame | None = None,
+    stage=None,
+) -> DataFrame:
+    """documents -> linked (doc_id, subj, pred, obj, obj_dt) rows in the
+    regime ``driver_lookups`` picks (``redirects``, ``canonical`` as there):
+    one mapInArrow extract pass, or the redirect join, extract,
+    ``resolve_links`` and ``apply_canonical_df``; the same rows as a
+    multiset either way.
+
+    ``stage(name, make)``: Pipeline.run's run_dir checkpoint, returning the
+    committed stage ``name`` or committing ``make()``.  A reused
+    ``candidates`` stage takes the join chain, a no-op on rows the driver
+    regime already linked (the canonical map is idempotent)."""
+    from .canonicalize import apply_canonical_df, canonical_map_df, identity_edges
+    from .extract import extract_candidates
+
+    stage = stage or (lambda _name, make: make())
+    lookups = None
+
+    def extract():
+        nonlocal lookups  # set only when the stage is computed, not reused
+        lookups = driver_lookups(mention_index, sameas, redirects, canonical)
+        docs = documents
+        if lookups is None and redirects is not None:
+            docs = resolve_redirects(documents, redirects)
+        return extract_candidates(docs, linkable_keys=linkable_keys, lookups=lookups)
+
+    candidates = stage("candidates", extract)
+    if lookups is not None:
+        return candidates.select("doc_id", "subj", "pred", "obj", "obj_dt")
+    linked = stage("linked", lambda: resolve_links(candidates, mention_index, sameas))
+    if canonical is True:
+        canonical = canonical_map_df(identity_edges(redirects, sameas))
+    return apply_canonical_df(linked, canonical) if isinstance(canonical, DataFrame) else linked
 
 
 def _auto_salt(idx: DataFrame) -> int:

@@ -11,29 +11,22 @@ wall time — the scalable version of the reference's evaluation.csv
 (utilities.py:319-346).
 
 Shuffle budget: ⑤ is the single unavoidable shuffle (global (s,p,o,dt)
-dedup, the reference's rdflib set semantics) and ② is narrow.  ①, ③ and ④
-take one of two regimes per build, read from plan statistics alone
-(engine/linking.driver_lookups):
+dedup, the reference's rdflib set semantics) and ② is narrow.  ①-④ are
+engine/linking.link_documents, the link step the stream sinks share, in
+the regime read from plan statistics:
 
-* driver lookups — the redirects, the rank-1 mention index and sameAs each
-  plan as a LocalRelation within spark.sql.autoBroadcastJoinThreshold
-  (tests, the benchmark, per-page and per-class runs).  Their rows already
-  live in the driver; they become dicts carried by the broadcast linker, and
-  the extract pass applies them with the canonical map, so ①, ③ and ④ leave
-  the plan: a lazy build is one mapInArrow pass, the dedup shuffle and the
-  write (2 Spark jobs).  Each dict is bounded by the same broadcast budget
-  as the join side it replaces.  The ``candidates`` stage then already
-  holds linked, canonicalized rows and no ``linked`` stage is written; the
-  join chain is a no-op on such rows (the canonical map is idempotent), so
-  a run_dir resumes under either regime.
-* joins — any file-backed side, or broadcast disabled.  ① and ③ are
-  broadcast joins while their snapshot sides fit the threshold and degrade
-  to shuffle joins past it (every snapshot join — redirects, page_types,
-  mention index, sameAs, canonical map — is size-gated via
-  engine/stats.fits_broadcast, so a 10^7-10^8-row dump never forces a
-  multi-GB driver broadcast; AQE splits runtime skew on the demoted joins),
-  and ④ touches only the small identity-edge set plus one size-gated map
-  application.
+* driver lookups — snapshot-sized sides (LocalRelations within
+  spark.sql.autoBroadcastJoinThreshold: tests, the benchmark, per-page and
+  per-class runs) ride in the extract pass with the canonical map, so a
+  lazy build is one mapInArrow pass, the dedup shuffle and the write
+  (2 Spark jobs).  The ``candidates`` stage then already holds linked,
+  canonicalized rows and no ``linked`` stage is written; the join chain is
+  a no-op on such rows, so a run_dir resumes under either regime.
+* joins — any file-backed side, or broadcast disabled.  Every snapshot
+  join is size-gated via engine/stats.fits_broadcast, so a
+  10^7-10^8-row dump degrades to a shuffle join instead of forcing a
+  multi-GB driver broadcast (AQE splits runtime skew), and ④ touches only
+  the small identity-edge set plus one size-gated map application.
 """
 
 from __future__ import annotations
@@ -42,44 +35,25 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .bloom import build_bloom
-from .canonicalize import apply_canonical_df, canonical_map_df, identity_edges
-from .extract import extract_candidates
-from .linking import attach_page_types, driver_lookups, resolve_links, resolve_redirects
+from .linking import attach_page_types, link_documents
 from .schemas import (
     MENTION_INDEX_SCHEMA,
     PAGE_TYPES_SCHEMA,
     REDIRECTS_SCHEMA,
     SAMEAS_SCHEMA,
+    local_df,
 )
 
 
-def _local_df(spark: SparkSession, rows, schema):
-    """createDataFrame via an Arrow table: Spark plans it as a LocalRelation
-    WITH size statistics, empty or not (a python list, or an empty pandas
-    frame, becomes a LogicalRDD whose stats are Long.MaxValue), so
-    downstream size-adaptive decisions (the driver-lookup regime, link-join
-    regime, canonicalization path) read Catalyst stats instead of running
-    count jobs — each skipped tiny job saves ~0.3-0.5 s of driver scheduling
-    latency."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    columns = list(zip(*rows)) or [()] * len(arrow_schema)
-    table = pa.table([pa.array(c, f.type) for c, f in zip(columns, arrow_schema)],
-                     schema=arrow_schema)
-    return spark.createDataFrame(table, schema=schema)
-
-
 def snapshots_to_dfs(spark: SparkSession, snapshots: dict):
-    mention_index = _local_df(
+    mention_index = local_df(
         spark, snapshots.get("mention_index", []), MENTION_INDEX_SCHEMA
     )
-    sameas = _local_df(spark, snapshots.get("sameas", []), SAMEAS_SCHEMA)
-    redirects = _local_df(spark, snapshots.get("redirects", []), REDIRECTS_SCHEMA)
+    sameas = local_df(spark, snapshots.get("sameas", []), SAMEAS_SCHEMA)
+    redirects = local_df(spark, snapshots.get("redirects", []), REDIRECTS_SCHEMA)
     return mention_index, sameas, redirects
 
 
@@ -87,7 +61,7 @@ def page_types_df(spark: SparkSession, snapshots: dict):
     rows = snapshots.get("page_types")
     if not rows:
         return None
-    return _local_df(spark, rows, PAGE_TYPES_SCHEMA)
+    return local_df(spark, rows, PAGE_TYPES_SCHEMA)
 
 
 class Pipeline:
@@ -96,29 +70,19 @@ class Pipeline:
         self.run_dir = run_dir
         self._lineage: list[dict] = []
 
-    # -- checkpoint helpers ------------------------------------------------
-    def _stage_path(self, name: str) -> str | None:
-        return os.path.join(self.run_dir, name) if self.run_dir else None
-
-    def _is_done(self, name: str) -> bool:
-        p = self._stage_path(name)
-        return bool(p) and os.path.exists(os.path.join(p, "_SUCCESS"))
-
-    def _checkpoint(self, df: DataFrame, name: str) -> DataFrame:
-        """Materialize a stage boundary when a run_dir is set (durable parquet
-        commit = the resume point + lineage row counts).  Without a run_dir the
-        pipeline stays fully LAZY: Catalyst fuses extract+link+canonical-apply+
-        dedup into one pass over the documents (the downstream plan reads each
-        stage exactly once — resolve_links is a single left join, so no branch
-        recomputes the extract UDF), and no cached blocks linger in the block
-        manager afterwards."""
-        p = self._stage_path(name)
-        if p is None:
-            return df
+    def _stage(self, name: str, make) -> DataFrame:
+        """``make()``, committed as a stage boundary when a run_dir is set
+        (the resume point + lineage row counts); a committed stage is read
+        back and ``make`` never runs.  Without a run_dir the pipeline stays
+        fully LAZY: Catalyst fuses every stage into one pass over the
+        documents, and no cached blocks linger afterwards."""
+        if not self.run_dir:
+            return make()
+        p = os.path.join(self.run_dir, name)
         t0 = time.time()
-        reused = self._is_done(name)  # BEFORE the write, or it's always True
+        reused = os.path.exists(os.path.join(p, "_SUCCESS"))
         if not reused:
-            df.write.mode("overwrite").parquet(p)
+            make().write.mode("overwrite").parquet(p)
         out = self.spark.read.parquet(p)
         n = out.count()
         self._lineage.append(
@@ -143,45 +107,18 @@ class Pipeline:
             # never the surface rows (collecting a real mention index — 10^8+
             # surfaces — is the one thing in this path that cannot scale)
             linkable_keys = build_bloom(mention_index.select("lang", "surface"))
-
-        lookups = None
-        if self._is_done("candidates"):
-            candidates = self.spark.read.parquet(self._stage_path("candidates"))
-            self._lineage.append({"stage": "candidates", "rows": candidates.count(),
-                                  "sec": 0.0, "reused": True})
-        else:
-            lookups = driver_lookups(mention_index, sameas, redirects, canonicalize)
-            docs = documents if lookups is not None else resolve_redirects(documents, redirects)
-            if page_types is not None:
-                docs = attach_page_types(docs, page_types)
-            candidates = self._checkpoint(
-                extract_candidates(docs, linkable_keys=linkable_keys, lookups=lookups),
-                "candidates",
-            )
-
-        if lookups is not None:
-            # the extract pass already linked and canonicalized every row
-            linked = candidates
-        else:
-            if self._is_done("linked"):
-                linked = self.spark.read.parquet(self._stage_path("linked"))
-                self._lineage.append({"stage": "linked", "rows": linked.count(),
-                                      "sec": 0.0, "reused": True})
-            else:
-                linked = self._checkpoint(
-                    resolve_links(candidates, mention_index, sameas), "linked"
-                )
-            if canonicalize:
-                cmap = canonical_map_df(identity_edges(redirects, sameas))
-                linked = apply_canonical_df(linked, cmap)
-
+        if page_types is not None:
+            documents = attach_page_types(documents, page_types)
+        linked = link_documents(
+            documents, mention_index, sameas, linkable_keys, redirects,
+            canonical=canonicalize, stage=self._stage,
+        )
         # project BEFORE the dedup shuffle: doc_id must not ride through the
         # exchange (the only wide stage in the pipeline)
-        triples = (
+        triples = self._stage("triples", lambda: (
             linked.select("subj", "pred", "obj", "obj_dt")
             .dropDuplicates(["subj", "pred", "obj", "obj_dt"])
-        )
-        triples = self._checkpoint(triples, "triples")
+        ))
         self._write_lineage()
         return triples
 

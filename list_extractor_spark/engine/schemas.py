@@ -2,6 +2,26 @@
 
 from pyspark.sql import types as T
 
+
+def local_df(spark, rows, schema: T.StructType | str):
+    """createDataFrame via an Arrow table (``schema``: a StructType or DDL):
+    Spark plans it as a LocalRelation WITH size statistics, empty or not (a
+    python list, or an empty pandas frame, becomes a LogicalRDD whose stats
+    are Long.MaxValue), so size-adaptive decisions (the driver-lookup
+    regime, link-join regime, canonicalization path) read Catalyst stats
+    instead of running ~0.3-0.5 s count jobs."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(columns, arrow_schema)],
+                     schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)
+
+
 SPAN_STRUCT = T.StructType(
     [
         T.StructField("kind", T.StringType(), False),

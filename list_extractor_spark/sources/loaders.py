@@ -15,13 +15,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str):
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            spark.read.parquet(p).createOrReplaceTempView(t)
-
-
 def load_documents_jsonl(
     spark: SparkSession,
     path: str,

@@ -4,23 +4,27 @@ The reference is strictly batch (one serial run per class,
 listExtractor.py:104-146).  A production corpus arrives continuously, so the
 engine also exposes the extract stage as a Structured Streaming flow:
 
-    readStream(parquet span docs) -> mapInArrow extract (same kernel) ->
-    broadcast link join -> append sink
+    readStream(parquet span docs) -> engine/linking.link_documents:
+        driver lookups: one mapInArrow pass that extracts and links
+        joins:          mapInArrow extract -> link joins [-> canonical join]
+    -> append sink | versioned snapshot commit
 
-The extract stage is stateless per document, so it streams unchanged — the
-batch pipeline's own mapInArrow kernel (engine/extract.py), incrementally
-executed per micro-batch.  The dedup/canonicalize stages are batch
-post-passes over the sink (set semantics need global state); watermarked
-windowed aggregation is demonstrated on the events stream for the late-data
-pattern.
+Both sinks share the batch pipeline's link step and regime, read from plan
+statistics when the query starts: snapshot-sized sides ride in the extract
+kernel's broadcast linker, so a micro-batch is one mapInArrow pass inside
+the sink's write; other sides keep the joins, planned again per batch.
+The stream takes no redirects: it commits the rows of batch
+``extract_candidates`` + ``resolve_links`` without redirects (then a
+caller's ``canonical_map``).  Dedup is a batch post-pass over the sink (set
+semantics need global state); watermarked windowed aggregation shows the
+late-data pattern on the events stream.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..engine.extract import extract_candidates
-from ..engine.linking import resolve_links
+from ..engine.linking import link_documents
 from ..engine.schemas import DOCUMENTS_SCHEMA
 
 
@@ -43,22 +47,18 @@ def stream_triples(
     trigger_available_now: bool = True,
     canonical_map: DataFrame | None = None,
 ):
-    """Continuous extraction: every micro-batch runs the narrow extract plan +
-    the broadcast link join; append-only parquet sink (exactly-once via the
+    """Continuous extraction: every micro-batch runs the extract + link step
+    (``link_documents``); append-only parquet sink (exactly-once via the
     streaming checkpoint).
 
     ``canonical_map``: optional STATIC (uri, canonical) snapshot applied
-    in-stream as a broadcast join per micro-batch — the standard
-    slowly-updating-dimension pattern (identity dumps refresh on snapshot
-    cadence, not per batch).  Global triple DEDUP stays a batch post-pass
-    over the sink: set semantics need global state the append stream cannot
-    hold."""
-    from ..engine.canonicalize import apply_canonical_df
-
-    candidates = extract_candidates(docs_stream, linkable_keys=linkable_keys)
-    triples = resolve_links(candidates, mention_index, sameas)
-    if canonical_map is not None:
-        triples = apply_canonical_df(triples, canonical_map)
+    in-stream — the standard slowly-updating-dimension pattern (identity
+    dumps refresh on snapshot cadence, not per batch).  Global triple DEDUP
+    stays a batch post-pass over the sink: set semantics need global state
+    the append stream cannot hold."""
+    triples = link_documents(
+        docs_stream, mention_index, sameas, linkable_keys, canonical=canonical_map
+    )
     writer = (
         triples.writeStream.format("parquet")
         .option("path", output_dir)
@@ -96,13 +96,11 @@ def stream_triples_versioned(
     Readers are never blocked and never see a half batch: the ``current``
     pointer flips once per batch, after the batch's files are fully
     written."""
-    from ..engine.canonicalize import apply_canonical_df
     from ..engine.snapshots import marker_committed, write_graph_snapshot
 
-    candidates = extract_candidates(docs_stream, linkable_keys=linkable_keys)
-    triples = resolve_links(candidates, mention_index, sameas)
-    if canonical_map is not None:
-        triples = apply_canonical_df(triples, canonical_map)
+    triples = link_documents(
+        docs_stream, mention_index, sameas, linkable_keys, canonical=canonical_map
+    )
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         marker = f"batch-{batch_id}"

@@ -916,15 +916,12 @@ def near_dup_resolve(
     head = edges.limit(driver_threshold + 1).collect()
     if len(head) <= driver_threshold:
         from ..core.components import components
+        from ..engine.schemas import local_df
 
         comp = components((r["u"], r["v"]) for r in head)
-        import pandas as pd
-
-        # pandas-backed -> LocalRelation WITH stats (downstream joins size it)
-        pdf = pd.DataFrame(sorted(comp.items()), columns=["doc_id", "cluster_id"])
-        members = spark.createDataFrame(
-            pdf, schema="doc_id string, cluster_id string"
-        )
+        # Arrow-backed -> LocalRelation WITH stats, empty or not (downstream
+        # joins size it)
+        members = local_df(spark, sorted(comp.items()), "doc_id string, cluster_id string")
     else:
         sym = edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))

@@ -66,16 +66,6 @@ def _tf_table(documents: DataFrame) -> DataFrame:
     )
 
 
-def term_stats(documents: DataFrame) -> DataFrame:
-    """Corpus term statistics: (term, df_docs, cf) — document frequency and
-    collection frequency.  One shuffle on term with map-side partial aggs;
-    the vocabulary table that idf and boilerplate analysis read."""
-    return _tokens(documents).groupBy("term").agg(
-        F.count_distinct("doc_id").alias("df_docs"),
-        F.count("*").alias("cf"),
-    )
-
-
 def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-k TF-IDF terms — the keyword-tagging pass.
 

@@ -311,10 +311,10 @@ def _nullable_frame(spark, rows, schema):
     NULL, as a hostile snapshot file would."""
     from pyspark.sql import types as T
 
-    from list_extractor_spark.engine.pipeline import _local_df
+    from list_extractor_spark.engine.schemas import local_df
 
     fields = [T.StructField(f.name, f.dataType, True) for f in schema.fields]
-    return _local_df(spark, rows, T.StructType(fields))
+    return local_df(spark, rows, T.StructType(fields))
 
 
 def _regime_case(case):
@@ -422,6 +422,143 @@ def test_driver_regime_matches_join_chain(spark, case):
     assert must <= seen, sorted(must - seen)
     if oracle:
         assert fast == oracle_triples(docs, snaps)
+
+
+STREAM_CASES = [
+    "dup_rank1", "rank2_only", "dup_sameas", "null_keys", "all_empty", "non_bmp",
+    "map_dup_uri", "map_null_uri", "map_null_canonical", "map_literal_obj",
+]
+
+
+def _stream_case(spark, case):
+    """(docs, mention index, sameAs, caller canonical map or None) for one
+    stream-vs-batch case: the no-redirect hostile snapshots of
+    ``_regime_case``, or a caller's map over the stream's own output."""
+    from pyspark.sql import types as T
+
+    from list_extractor_spark.engine.schemas import MENTION_INDEX_SCHEMA, SAMEAS_SCHEMA
+
+    docs, snaps, _, _ = _regime_case("all_empty" if case.startswith("map_") else case)
+    if case.startswith("map_"):
+        snaps = make_snapshots()
+    mi = _nullable_frame(spark, snaps["mention_index"], MENTION_INDEX_SCHEMA)
+    sa = _nullable_frame(spark, snaps["sameas"], SAMEAS_SCHEMA)
+    if not case.startswith("map_"):
+        return docs, mi, sa, None
+    from list_extractor_spark.engine.extract import extract_candidates
+    from list_extractor_spark.engine.linking import resolve_links
+
+    keys = {(r[0], r[1]) for r in snaps["mention_index"]}
+    rows = resolve_links(extract_candidates(_hostile_df(spark, docs), keys), mi, sa).collect()
+    subj = sorted({r["subj"] for r in rows})
+    iri = sorted({r["obj"] for r in rows if r["obj_dt"] is None})
+    lit = sorted({r["obj"] for r in rows if r["obj_dt"] is not None})
+    cmap = {
+        "map_dup_uri": [(subj[0], "urn:a"), (subj[0], "urn:b"), (iri[0], "urn:c")],
+        "map_null_uri": [(None, "urn:a"), (subj[0], "urn:b"), (iri[0], "urn:c")],
+        "map_null_canonical": [(subj[0], None), (subj[1], "urn:b"), (iri[0], None)],
+        "map_literal_obj": [(lit[0], "urn:lit"), (subj[0], lit[0]), (iri[0], "urn:c")],
+    }[case]
+    schema = T.StructType([T.StructField("uri", T.StringType()),
+                           T.StructField("canonical", T.StringType())])
+    return docs, mi, sa, _nullable_frame(spark, cmap, schema)
+
+
+@pytest.mark.timeout(600)
+@pytest.mark.parametrize("case", STREAM_CASES)
+def test_stream_sinks_match_batch_join_chain(spark, tmp_path, case):
+    """Both stream sinks, in the driver-lookup regime and in the join chain
+    (broadcast disabled), commit the rows of batch ``extract_candidates`` +
+    ``resolve_links`` without redirects (+ ``apply_canonical_df`` of a
+    caller's map) as a multiset, doc_id included."""
+    from list_extractor_spark.engine.canonicalize import apply_canonical_df
+    from list_extractor_spark.engine.extract import extract_candidates
+    from list_extractor_spark.engine.linking import resolve_links
+    from list_extractor_spark.engine.snapshots import read_graph_at
+    from list_extractor_spark.streaming.stream_extract import (
+        stream_documents,
+        stream_triples,
+        stream_triples_versioned,
+    )
+
+    docs, mi, sa, cmap = _stream_case(spark, case)
+    keys = {(r["lang"], r["surface"]) for r in mi.collect()}
+    df = _hostile_df(spark, docs)
+    in_dir = str(tmp_path / "in")
+    df.write.parquet(in_dir)
+    want = resolve_links(extract_candidates(df, keys), mi, sa)
+    if cmap is not None:
+        want = apply_canonical_df(want, cmap)
+    want = Counter(tuple(r) for r in want.collect())
+    assert want or case == "all_empty"
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    for threshold in (old, "-1"):
+        spark.conf.set(key, threshold)
+        try:
+            driver = driver_lookups(mi, sa, None, cmap) is not None
+            assert driver == (threshold == old and case != "map_dup_uri"), threshold
+            out, table = str(tmp_path / f"out{threshold}"), str(tmp_path / f"graph{threshold}")
+            for q in (
+                stream_triples(stream_documents(spark, in_dir), mi, sa, keys, out,
+                               str(tmp_path / f"ckpt{threshold}"), canonical_map=cmap),
+                stream_triples_versioned(stream_documents(spark, in_dir), mi, sa, keys, table,
+                                         str(tmp_path / f"vckpt{threshold}"), canonical_map=cmap),
+            ):
+                q.awaitTermination(240)
+        finally:
+            spark.conf.set(key, old)
+        cols = ("doc_id", "subj", "pred", "obj", "obj_dt")
+        got = Counter(tuple(r) for r in spark.read.parquet(out).select(*cols).collect())
+        assert got == want, (threshold, sorted((got - want).elements())[:3],
+                             sorted((want - got).elements())[:3])
+        if want:
+            got = Counter(tuple(r) for r in read_graph_at(spark, table).select(*cols).collect())
+            assert got == want, threshold
+
+
+@pytest.mark.timeout(600)
+def test_versioned_stream_micro_batch_runs_one_job(spark, tmp_path):
+    """On LocalRelation snapshot sides a micro-batch of the versioned sink is
+    one Spark job, the commit's write; with broadcast disabled it runs the
+    join chain, whose jobs come on top of the commit."""
+    from list_extractor_spark.streaming.stream_extract import (
+        stream_documents,
+        stream_triples_versioned,
+    )
+
+    sc = spark.sparkContext
+    mi, sa, _ = snapshots_to_dfs(spark, make_snapshots())
+    keys = {(r["lang"], r["surface"]) for r in mi.collect()}
+    docs = corpus_to_rows(make_corpus(12, hub_every=0))
+    in_dir = tmp_path / "in"
+    for i in range(6):  # 6 files, 4 a trigger: 2 micro-batches
+        spark.createDataFrame(docs[2 * i:2 * i + 2], schema=DOCUMENTS_SCHEMA) \
+            .coalesce(1).write.parquet(str(in_dir / f"f{i}"))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    jobs = {}
+    for threshold in (old, "-1"):
+        spark.conf.set(key, threshold)
+        table = str(tmp_path / f"graph{threshold}")
+        try:
+            q = stream_triples_versioned(
+                stream_documents(spark, str(in_dir / "*")), mi, sa, keys, table,
+                str(tmp_path / f"ckpt{threshold}"),
+            )
+            q.awaitTermination(240)
+        finally:
+            spark.conf.set(key, old)
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert len(batches) == 2, q.recentProgress
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        store = sc._jsc.sc().statusStore()
+        ids = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+        jobs[threshold] = [store.job(j).description().getOrElse(None) for j in ids]
+    commit = f"snapshots.commit {tmp_path / f'graph{old}'}"
+    assert jobs[old] == [commit, commit], jobs[old]
+    assert len(jobs["-1"]) > 2, jobs["-1"]
 
 
 def _hostile_docs(case):

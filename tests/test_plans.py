@@ -471,6 +471,42 @@ def test_local_relation_rows_sums_union_and_project_trees(spark, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def test_empty_maps_plan_as_local_relations(spark):
+    """An empty canonical map (no identity edges) and an empty near-dup
+    verdict plan as 0-row LocalRelations, not stats-less LogicalRDDs, so
+    applying the map sizes it from plan stats with no Spark job."""
+    import uuid
+
+    from list_extractor_spark.engine.canonicalize import (
+        apply_canonical_df,
+        canonical_map_df,
+        identity_edges,
+    )
+    from list_extractor_spark.engine.stats import local_relation_rows
+    from list_extractor_spark.tda.dedup import near_dup_resolve
+
+    _, sa, rd = snapshots_to_dfs(spark, {})
+    cmap = canonical_map_df(identity_edges(rd, sa))
+    assert local_relation_rows(cmap) == 0
+    pairs = spark.createDataFrame([], "doc_a string, doc_b string")
+    assert local_relation_rows(near_dup_resolve(pairs)) == 0
+
+    triples = spark.createDataFrame(
+        [("d", "s", "p", "o", None)], "doc_id string, subj string, pred string, obj string, obj_dt string"
+    )
+    sc = spark.sparkContext
+    group = f"empty-map-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        applied = apply_canonical_df(triples, cmap)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert [tuple(r) for r in applied.collect()] == [("d", "s", "p", "o", None)]
+
+
 def test_near_dup_resolve_evaluates_upstream_pairs_once(spark):
     """The distributed CC loop must NOT re-run the (usually expensive)
     upstream pair pipeline per round: an accumulator-counting UDF upstream
